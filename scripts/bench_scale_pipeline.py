@@ -90,7 +90,7 @@ def main() -> None:
     # growth step paying the fault cost).
     from pyspark.sql import functions as F
 
-    from sheep_spark.tree import collect_int64_columns
+    from sheep_spark.tree import collect_columns
 
     # ADAPTIVE (r6 late): in one full-budget run the real collect still
     # cost 29.5 s after three fixed warmup passes (post-scaling throttle
@@ -102,7 +102,7 @@ def main() -> None:
     warm_last = 0.0
     for _ in range(6):
         t0 = time.time()
-        collect_int64_columns(
+        collect_columns(
             spark.range(EDGES).select(
                 F.col("id").cast("int").alias("src"),
                 F.col("id").cast("int").alias("dst"),
@@ -185,8 +185,7 @@ def main() -> None:
     seq_t: dict = {}
     # r6 latest: the fused funnel+tree (one collect, then the entire
     # rank + sort + sweep body in one compiled call; falls back to the
-    # staged driver_sequence_arrays + build_tree_arrays with identical
-    # results). Stage attribution: degree_sequence = collect + rank
+    # numpy sequence + build_tree_arrays with identical results). Stage attribution: degree_sequence = collect + rank
     # share of the call, tree_build = kernel share + the DF upload —
     # the same boundaries as the staged form, and the same core sum.
     arrs = graph.driver_sequence_tree_arrays(
@@ -335,10 +334,10 @@ def parity_main() -> None:
     # see main()'s A/B note)
     from pyspark.sql import functions as F
 
-    from sheep_spark.tree import collect_int64_columns
+    from sheep_spark.tree import collect_columns
 
     for _ in range(3):
-        collect_int64_columns(
+        collect_columns(
             spark.range(EDGES).select(
                 F.col("id").alias("src"), F.col("id").alias("dst")
             ),

@@ -1,16 +1,18 @@
 #!/usr/bin/env python3
 """Profile the elimination-tree kernel in isolation (no Spark).
 
-Generates the same skewed distribution as bench.synth_edges at com-lj
-scale (35M undirected edges, V=4M), converts to deduped (lo, hi)
-pos-space pairs, then measures:
+Generates the same skewed distribution as bench.synth_edges (default
+com-lj scale: 35M undirected edges, V=4M; override with PROF_EDGES /
+PROF_V), converts to deduped (lo, hi) pos-space pairs, then measures:
 
-  1. _msf_select wall + retention (selected / input edges)
-  2. the interpreted union-find sweep WITH selection
-  3. the sweep WITHOUT selection (the round-2 driver path)
+  1. ``tree._eliminate`` as the engine runs it — the compiled
+     counting-sort sweep when a toolchain is present, with the sort and
+     sweep phases timed inside C (``kernel_s``, ``kernel_detail``);
+  2. unless PROF_SKIP_NOSELECT=1, the interpreted reference
+     (_msf_select + Python-list sweep, what runs without a compiler),
+     and checks that both emit the identical (kid, parent) set.
 
-Prints one JSON line. Used to ground the BASELINE.md kernel-rate claims
-(VERDICT r2 tasks 1 and 3).
+Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -31,13 +33,13 @@ V = int(os.environ.get("PROF_V", str(4_000_000)))
 SKIP_NOSELECT = os.environ.get("PROF_SKIP_NOSELECT") == "1"
 
 
-def _warm_memory_pool(gb: float = 8.0) -> None:
-    """Pre-touch a pool of pages and free it. This sandbox backs fresh
-    pages lazily at ~60 MB/s first touch (measured; warm pages run at
-    4+ GB/s), so any phase that allocates big fresh arrays pays a fake
-    one-time cost a real host doesn't have. Touch-and-free once, then
-    the allocator reuses the warm pool."""
-    block = np.ones(int(gb * 125_000_000), dtype=np.int64)
+def _warm_memory_pool() -> None:
+    """Pre-touch a pool of pages and free it. Fresh pages are backed
+    lazily (measured ~60 MB/s first touch on a throttled VM, 4+ GB/s
+    warm), so any phase that allocates big fresh arrays pays a one-time
+    cost a long-lived driver doesn't have. The pool scales with the
+    edge count: 8 GB at 35M edges."""
+    block = np.ones(int(8.0 * E / 35e6 * 125_000_000), dtype=np.int64)
     del block
 
 
@@ -60,8 +62,6 @@ def main() -> None:
 
     from sheep_spark import _csweep
 
-    # Default kernel: the compiled counting-sort + sweep when available
-    # (r6 late), with fused pre/pst bincounts; phases from inside C.
     tm: dict = {}
     t0 = time.time()
     kid, par = tree._eliminate(lo, hi, V, timings=tm)
@@ -72,17 +72,16 @@ def main() -> None:
     out["sort_sweep_compiled"] = _csweep.loaded_sort_sweep() is not None
 
     if not SKIP_NOSELECT:
-        # Legacy path for comparison: Boruvka select + packed sort +
-        # (C or interpreted) sweep — what the kernel runs when the
-        # sort-sweep .so is unavailable.
+        # the interpreted reference: what _eliminate runs without a
+        # compiler (Boruvka selection, then the Python-list sweep)
         real_ss = _csweep.loaded_sort_sweep
         _csweep.loaded_sort_sweep = lambda: None
         try:
             tm2: dict = {}
             t0 = time.time()
             kid2, par2 = tree._eliminate(lo, hi, V, timings=tm2)
-            out["legacy_select_sweep_s"] = round(time.time() - t0, 2)
-            out["legacy_detail"] = tm2
+            out["interpreted_s"] = round(time.time() - t0, 2)
+            out["interpreted_detail"] = tm2
         finally:
             _csweep.loaded_sort_sweep = real_ss
         assert set(zip(kid.tolist(), par.tolist())) == set(
@@ -96,5 +95,5 @@ def main() -> None:
 if __name__ == "__main__":
     from bench import ensure_malloc_retention
 
-    ensure_malloc_retention()  # sandbox first-touch artifact; see bench.py
+    ensure_malloc_retention()  # first-touch artifact; see bench.py
     main()

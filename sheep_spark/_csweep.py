@@ -1,21 +1,24 @@
-"""Optional C implementations of the two driver-side sequential loops.
+"""Compiled kernels for the driver-side sequential loops.
 
-The elimination sweep (tree.py ``_eliminate``) and the FFD tree packing
-(partitioner.py ``forward_partition``) are inherently sequential passes
-— the two kernels numpy cannot vectorize — and their interpreted loops
-run at ~1M steps/s/core, the documented serial floor of the driver tree
-build. This module compiles the EXACT same loops (integer-for-integer
-identical to the Python versions; the FFD kid tie-break spelled out as
-the total order python's stable sort produces) to a tiny shared library
-at first use and calls them via ctypes on the numpy buffers, ~30-50x
-faster.
+Two kernels numpy cannot vectorize are written here in C, compiled to a
+small shared library at first use, and called through ctypes on numpy
+buffers:
 
-Strictly an accelerator, never a dependency: any failure (no compiler,
-read-only tmp, load error) silently yields the interpreted fallback, so
-the engine still runs on nodes without a toolchain; set
-SPARK_GRAFT_NO_CSWEEP=1 to force the fallback (used by the equivalence
-tests). The compiled artifact is cached per source-hash in the temp dir
-and the rename is atomic, so concurrent executor workers race safely.
+- the elimination sweep (tree.py ``_eliminate``): one counting-sort +
+  union-find core, instantiated with int32 internals and, for inputs
+  with 2^31 or more vertices or edges, int64 internals. The fused
+  sequence+tree funnel (``sheep_seq_tree``) ends in the same core.
+- the FFD tree packing (partitioner.py ``forward_partition``).
+
+Each has one interpreted reference in Python that produces identical
+output (the FFD kid tie-break is spelled out as the total order Python's
+stable sort produces); the pytest suite checks each pair. The compiled
+versions are an accelerator, never a dependency: when they cannot be
+built or loaded (no compiler, unwritable temp dir, missing symbol) the
+engine runs the interpreted references and warns once per process with
+the reason. SPARK_GRAFT_NO_CSWEEP=1 forces the interpreted references.
+The library is cached per source hash in the temp dir and renamed into
+place atomically, so concurrent executor workers race safely.
 """
 
 from __future__ import annotations
@@ -31,35 +34,6 @@ import numpy as np
 _C_SRC = r"""
 #include <stdint.h>
 #include <stdlib.h>
-
-/* Elimination sweep over (lo, hi) pairs already sorted by hi.
-   Exact port of tree.py::_eliminate's loop: for each edge, find the
-   root of lo's component with path halving; if it differs from hi,
-   emit (root -> hi) and union. uf must arrive initialized to the
-   identity permutation; kid_out/par_out must hold min(n_edges,
-   n_vertices) slots. Returns the number of pairs emitted. */
-int64_t sheep_sweep(const int64_t *lo, const int64_t *hi, int64_t n_edges,
-                    int64_t *uf, int64_t *kid_out, int64_t *par_out) {
-    int64_t n_out = 0;
-    for (int64_t i = 0; i < n_edges; i++) {
-        int64_t x = hi[i];
-        int64_t r = lo[i];
-        int64_t p = uf[r];
-        while (p != r) {       /* path halving, as in the Python sweep */
-            int64_t pp = uf[p];
-            uf[r] = pp;
-            r = pp;
-            p = uf[r];
-        }
-        if (r != x) {
-            kid_out[n_out] = r;
-            par_out[n_out] = x;
-            n_out++;
-            uf[r] = x;
-        }
-    }
-    return n_out;
-}
 
 /* Kid ordering for the FFD cut step: weight DESC, jnid ASC — the same
    total order python's STABLE list.sort(key=-comp) produces over the
@@ -171,100 +145,114 @@ static double sheep_now(void) {
     return ts.tv_sec + ts.tv_nsec * 1e-9;
 }
 
-/* Counting-sort the edges by hi (bucket = hi value, O(E + V) — the hi
-   of every edge in bucket x is x itself, so only lo is materialized
-   sorted), then run the elimination sweep over the buckets ascending.
-   One call replaces _msf_select + np.sort + sheep_sweep AND the two
-   full-width bincounts of build_tree_arrays: pre_w[v] = #edges with
-   hi == v falls out of the histogram pass, pst_w[v] = #edges with
-   lo == v accumulates during the scatter. Requires ids < 2^31
-   (int32 internals — the kernel is memory-bound, so halving element
-   width halves its traffic) and n_edges < 2^31 (offsets live in cnt's
-   int32 slots). uf is initialized to the identity HERE; lo_s is an
-   n_edges int32 scratch, cnt an (n_vertices+1) int32 scratch,
-   kid/par int64 outs with min(n_edges, n_vertices) slots, pre_w/pst_w
-   n_vertices int64 outs, phases a double[2] out (sort wall, sweep
-   wall). Returns the number of (kid, parent) pairs emitted, or -2 if
-   an id falls outside [0, n_vertices) — checked BEFORE each use (the
-   predictable branch is ~free), where the numpy paths would raise
-   IndexError and unchecked C would corrupt memory. */
+/* The elimination sweep (jtree.cpp:34-55), written once. Counting-sort
+   the (lo, hi) edges by hi — the bucket of an edge IS its hi, so only
+   lo is materialized sorted — then walk the buckets ascending: for each
+   edge find the root of lo's component with path halving; if it
+   differs from hi, emit (root -> hi) and union. Edges with equal hi
+   commute, so the counting sort's input-order buckets are as good as
+   any hi-sorted order.
+
+   IN is the element type of lo/hi; T is the width of the internals
+   (lo_s: n_edges slots, cnt: n_vertices + 1, uf: n_vertices). T is
+   int32 whenever n_vertices and n_edges are below 2^31 — the loops are
+   memory-bound, so halving the width halves their traffic — and int64
+   otherwise. Every id must lie in [0, n_vertices); callers check.
+   pre_w/pst_w receive bincount(hi)/bincount(lo) in n_vertices slots as
+   byproducts of the sort, or are both NULL to skip them. kid_out and
+   par_out hold min(n_edges, n_vertices) slots; phases = double[2]
+   (sort wall, sweep wall). Returns the number of pairs emitted. */
+#define SHEEP_SORT_SWEEP(NAME, IN, T)                                     \
+static int64_t NAME(const IN *lo, const IN *hi, int64_t n_edges,          \
+                    int64_t n_vertices, T *lo_s, T *cnt, T *uf,           \
+                    int64_t *kid_out, int64_t *par_out,                   \
+                    int64_t *pre_w, int64_t *pst_w, double *phases) {     \
+    double t0 = sheep_now();                                              \
+    for (int64_t v = 0; v <= n_vertices; v++) cnt[v] = 0;                 \
+    for (int64_t i = 0; i < n_edges; i++) {                               \
+        if (i + 64 < n_edges) __builtin_prefetch(&cnt[hi[i + 64]], 1, 1); \
+        cnt[hi[i]]++;                                                     \
+    }                                                                     \
+    int64_t run = 0;                                                      \
+    for (int64_t v = 0; v < n_vertices; v++) {                            \
+        T c = cnt[v];                                                     \
+        if (pre_w) { pre_w[v] = c; pst_w[v] = 0; }                        \
+        uf[v] = (T)v;                                                     \
+        cnt[v] = (T)run;                                                  \
+        run += c;                                                         \
+    }                                                                     \
+    for (int64_t i = 0; i < n_edges; i++) {                               \
+        if (i + 64 < n_edges) {                                           \
+            __builtin_prefetch(&cnt[hi[i + 64]], 1, 1);                   \
+            if (pst_w) __builtin_prefetch(&pst_w[lo[i + 64]], 1, 1);      \
+        }                                                                 \
+        T l = (T)lo[i];                                                   \
+        lo_s[cnt[hi[i]]++] = l;                                           \
+        if (pst_w) pst_w[l]++;                                            \
+    }                                                                     \
+    phases[0] = sheep_now() - t0;                                         \
+    t0 = sheep_now();                                                     \
+    /* cnt[x] is now the END offset of bucket x */                        \
+    int64_t n_out = 0, pos = 0;                                           \
+    for (int64_t x = 0; x < n_vertices; x++) {                            \
+        int64_t end = cnt[x];                                             \
+        for (; pos < end; pos++) {                                        \
+            if (pos + 16 < n_edges)                                       \
+                __builtin_prefetch(&uf[lo_s[pos + 16]], 0, 1);            \
+            T r = lo_s[pos];                                              \
+            T p = uf[r];                                                  \
+            while (p != r) {  /* path halving */                          \
+                T pp = uf[p];                                             \
+                uf[r] = pp;                                               \
+                r = pp;                                                   \
+                p = uf[r];                                                \
+            }                                                             \
+            if (r != (T)x) {                                              \
+                kid_out[n_out] = r;                                       \
+                par_out[n_out] = x;                                       \
+                n_out++;                                                  \
+                uf[r] = (T)x;                                             \
+            }                                                             \
+        }                                                                 \
+    }                                                                     \
+    phases[1] = sheep_now() - t0;                                         \
+    return n_out;                                                         \
+}
+
+SHEEP_SORT_SWEEP(sort_sweep_w32, int64_t, int32_t)
+SHEEP_SORT_SWEEP(sort_sweep_w64, int64_t, int64_t)
+SHEEP_SORT_SWEEP(sort_sweep_seq, int32_t, int32_t)
+#undef SHEEP_SORT_SWEEP
+
+/* tree.py _eliminate's compiled path: int64 (lo, hi) in any order;
+   ``wide`` selects the int64 internals (scratch buffers sized to
+   match). See SHEEP_SORT_SWEEP for the contract. */
 int64_t sheep_sort_sweep(const int64_t *lo, const int64_t *hi,
-                         int64_t n_edges, int64_t n_vertices,
-                         int32_t *lo_s, int32_t *cnt, int32_t *uf,
+                         int64_t n_edges, int64_t n_vertices, int64_t wide,
+                         void *lo_s, void *cnt, void *uf,
                          int64_t *kid_out, int64_t *par_out,
                          int64_t *pre_w, int64_t *pst_w, double *phases) {
-    double t0 = sheep_now();
-    for (int64_t v = 0; v <= n_vertices; v++) cnt[v] = 0;
-    for (int64_t i = 0; i < n_edges; i++) {
-        if (i + 64 < n_edges) __builtin_prefetch(&cnt[hi[i + 64]], 1, 1);
-        if ((uint64_t)hi[i] >= (uint64_t)n_vertices) return -2;
-        cnt[hi[i]]++;
-    }
-    int64_t run = 0;
-    for (int64_t v = 0; v < n_vertices; v++) {
-        int32_t c = cnt[v];
-        pre_w[v] = c;
-        pst_w[v] = 0;
-        uf[v] = (int32_t)v;
-        cnt[v] = (int32_t)run;
-        run += c;
-    }
-    for (int64_t i = 0; i < n_edges; i++) {
-        if (i + 64 < n_edges) {
-            __builtin_prefetch(&cnt[hi[i + 64]], 1, 1);
-            __builtin_prefetch(&pst_w[lo[i + 64]], 1, 1);
-        }
-        if ((uint64_t)lo[i] >= (uint64_t)n_vertices) return -2;
-        int32_t l = (int32_t)lo[i];
-        lo_s[cnt[hi[i]]++] = l;
-        pst_w[l]++;
-    }
-    phases[0] = sheep_now() - t0;
-    t0 = sheep_now();
-    /* cnt[x] is now the END offset of bucket x; walk buckets ascending
-       — exactly the hi-sorted sweep of sheep_sweep, with hi implied */
-    int64_t n_out = 0, pos = 0;
-    for (int64_t x = 0; x < n_vertices; x++) {
-        int64_t end = cnt[x];
-        for (; pos < end; pos++) {
-            if (pos + 16 < n_edges) __builtin_prefetch(&uf[lo_s[pos + 16]], 0, 1);
-            int32_t r = lo_s[pos];
-            int32_t p = uf[r];
-            while (p != r) {       /* path halving, as everywhere else */
-                int32_t pp = uf[p];
-                uf[r] = pp;
-                r = pp;
-                p = uf[r];
-            }
-            if (r != (int32_t)x) {
-                kid_out[n_out] = r;
-                par_out[n_out] = x;
-                n_out++;
-                uf[r] = (int32_t)x;
-            }
-        }
-    }
-    phases[1] = sheep_now() - t0;
-    return n_out;
+    if (wide)
+        return sort_sweep_w64(lo, hi, n_edges, n_vertices, lo_s, cnt, uf,
+                              kid_out, par_out, pre_w, pst_w, phases);
+    return sort_sweep_w32(lo, hi, n_edges, n_vertices, lo_s, cnt, uf,
+                          kid_out, par_out, pre_w, pst_w, phases);
 }
 
 /* Fused sequence + tree: the whole rank-0 funnel body after the Arrow
    collect in one call — degree histogram over (src, dst), counting
    rank by (degree asc, vid asc) (sequence.h:52-63 semantics; the
    counting sort's vid-ascending placement IS the tie-break), pos-space
-   edge transform, counting sort by hi, union-find sweep — emitting
-   deg_full / pos_full (-1 for isolated vertices), the (kid, parent)
-   tree edges and the pos-indexed pre/pst weights. Exactly equal to
-   the numpy rank pass + sheep_sort_sweep (asserted by pytest); ~1.4x
-   faster at 35M/4M because the gathers, min/max and both sorts fuse
-   into three passes over the edges with int32 temporaries. Same
-   envelope as sheep_sort_sweep: ids and n_edges < 2^31; out-of-range
+   edge transform, then the SHEEP_SORT_SWEEP core over the int32
+   pos-space edges — emitting deg_full / pos_full (-1 for isolated
+   vertices), the (kid, parent) tree edges and the pos-indexed pre/pst
+   weights. Exactly equal to the numpy rank pass + sheep_sort_sweep
+   (asserted by pytest). Requires ids and n_edges < 2^31; out-of-range
    ids return -2 before any use. *out_n receives the non-isolated
    vertex count n; pre_w/pst_w use slots [0, n); phases = double[3]
-   (hist+rank, edge passes, sweep). ``elem`` is the input element width
-   (4 or 8 bytes): the int32 funnel transfer stays narrow end-to-end —
-   no driver-side widening pass, half the read traffic in the two
-   edge loops. */
+   (hist+rank, edge transform + sort, sweep). ``elem`` is the input
+   element width (4 or 8 bytes): the int32 funnel transfer stays narrow
+   end-to-end — no driver-side widening pass. */
 int64_t sheep_seq_tree(const void *src_v, const void *dst_v, int64_t elem,
                        int64_t n_edges, int64_t m,
                        int64_t *deg_full,              /* [m] out */
@@ -316,82 +304,39 @@ int64_t sheep_seq_tree(const void *src_v, const void *dst_v, int64_t elem,
     }
     for (int64_t v = 0; v < m; v++) {
         int64_t d = deg_full[v];
-        if (d > 0) {
-            int32_t p = cnt[d]++;
-            pos_full[v] = p;
-            uf[p] = p;
-        } else {
-            pos_full[v] = -1;
-        }
+        pos_full[v] = d > 0 ? cnt[d]++ : -1;
     }
-    for (int64_t p = 0; p < n; p++) { pre_w[p] = 0; pst_w[p] = 0; }
     phases[0] = sheep_now() - t0;
     t0 = sheep_now();
-    /* pos-space edges + hi histogram (cnt reused: zero [0, n]) */
-    for (int64_t p = 0; p <= n; p++) cnt[p] = 0;
 #define SHEEP_SEQ_XFORM(SRC, DST)                                 \
     for (int64_t i = 0; i < n_edges; i++) {                       \
         int32_t ps = pos_full[SRC[i]];                            \
         int32_t pd = pos_full[DST[i]];                            \
-        int32_t lo = ps < pd ? ps : pd;                           \
-        int32_t hi = ps < pd ? pd : ps;                           \
-        lo_t[i] = lo;                                             \
-        hi_t[i] = hi;                                             \
-        cnt[hi]++;                                                \
+        lo_t[i] = ps < pd ? ps : pd;                              \
+        hi_t[i] = ps < pd ? pd : ps;                              \
     }
     if (elem == 4) { SHEEP_SEQ_XFORM(s32, d32) } else { SHEEP_SEQ_XFORM(s64, d64) }
 #undef SHEEP_SEQ_XFORM
-    run = 0;
-    for (int64_t p = 0; p < n; p++) {
-        int32_t c = cnt[p]; pre_w[p] = c; cnt[p] = (int32_t)run; run += c;
-    }
-    for (int64_t i = 0; i < n_edges; i++) {
-        if (i + 64 < n_edges) {
-            __builtin_prefetch(&cnt[hi_t[i + 64]], 1, 1);
-            __builtin_prefetch(&pst_w[lo_t[i + 64]], 1, 1);
-        }
-        int32_t l = lo_t[i];
-        lo_s[cnt[hi_t[i]]++] = l;
-        pst_w[l]++;
-    }
-    phases[1] = sheep_now() - t0;
-    t0 = sheep_now();
-    int64_t n_out = 0, pos = 0;
-    for (int64_t x = 0; x < n; x++) {
-        int64_t end = cnt[x];
-        for (; pos < end; pos++) {
-            if (pos + 16 < n_edges) __builtin_prefetch(&uf[lo_s[pos + 16]], 0, 1);
-            int32_t r = lo_s[pos];
-            int32_t p = uf[r];
-            while (p != r) {
-                int32_t pp = uf[p];
-                uf[r] = pp;
-                r = pp;
-                p = uf[r];
-            }
-            if (r != (int32_t)x) {
-                kid_out[n_out] = r;
-                par_out[n_out] = x;
-                n_out++;
-                uf[r] = (int32_t)x;
-            }
-        }
-    }
-    phases[2] = sheep_now() - t0;
+    double xform_s = sheep_now() - t0;
+    int64_t n_out = sort_sweep_seq(lo_t, hi_t, n_edges, n, lo_s, cnt, uf,
+                                   kid_out, par_out, pre_w, pst_w,
+                                   phases + 1);
+    phases[1] += xform_s;
     *out_n = n;
     return n_out;
 }
 """
 
-_cached_fn = None
 _cached_ffd = None
 _cached_sort_sweep = None
 _cached_seq_tree = None
 _load_attempted = False
 
 
-def _compile() -> str | None:
-    """Compile the kernel once per source version; atomic cache in tmp."""
+def _compile() -> str:
+    """Compile the kernels once per source version; atomic cache in tmp.
+    Raises OSError (no gcc, unwritable tmp) or CalledProcessError /
+    TimeoutExpired (the compile itself failed)."""
     tag = hashlib.md5(_C_SRC.encode()).hexdigest()[:16]
     tmpdir = tempfile.gettempdir()
     so_path = os.path.join(tmpdir, f"sheep_csweep_{tag}.so")
@@ -410,25 +355,12 @@ def _compile() -> str | None:
         )
         os.rename(build_path, so_path)  # atomic: concurrent compiles race safely
         return so_path
-    except Exception:
-        return None
     finally:
         for p in (c_path, build_path):
             try:
                 os.remove(p)
             except OSError:
                 pass
-
-
-def loaded():
-    """The compiled sweep as a python callable, or None (fallback).
-
-    Signature: fn(lo, hi, uf, kid_out, par_out) -> n_out, where all five
-    are int64 C-contiguous numpy arrays, lo/hi sorted by hi, uf the
-    identity permutation of n_vertices (mutated in place).
-    """
-    _load()
-    return _cached_fn
 
 
 def loaded_ffd():
@@ -447,13 +379,12 @@ def loaded_ffd():
 def loaded_sort_sweep():
     """The compiled counting-sort + sweep as a python callable, or None.
 
-    Signature: fn(lo, hi, n_vertices, kid_out, par_out, pre_w, pst_w)
-    -> (n_out, sort_s, sweep_s); lo/hi C-contiguous int64 inputs in ANY
-    order with values in [0, n_vertices) and n_vertices, n_edges < 2^31
-    (caller's guard); kid_out/par_out int64 with min(n_edges,
-    n_vertices) slots; pre_w/pst_w int64 n_vertices slots receiving
-    bincount(hi)/bincount(lo) as a free byproduct. Scratch (sorted-lo,
-    counts, union-find) is allocated per call inside the wrapper."""
+    Signature: fn(lo, hi, n_vertices, wide, weights) -> (kid, par,
+    pre_w, pst_w, (sort_s, sweep_s)); lo/hi C-contiguous int64 in ANY
+    order with values in [0, n_vertices) (the caller checks); ``wide``
+    selects the int64 internals, required once n_vertices or len(lo)
+    reaches 2^31; pre_w/pst_w are bincount(hi)/bincount(lo) when
+    ``weights``, else None (not computed)."""
     _load()
     return _cached_sort_sweep
 
@@ -464,108 +395,78 @@ def loaded_seq_tree():
     Signature: fn(src, dst, m) -> dict(n, kid, par, deg_full, pos_full,
     pre_w, pst_w, phases) or None when the kernel declines the input
     (multigraph degree overflow); raises ValueError on out-of-range
-    ids. src/dst are C-contiguous int64 with values in [0, m);
-    m, n_edges < 2^31 (caller's guard)."""
+    ids. src/dst are C-contiguous int32 or int64 (same dtype) with
+    values in [0, m); m, n_edges < 2^31 (caller's guard)."""
     _load()
     return _cached_seq_tree
 
 
+def _unavailable(reason: str) -> None:
+    import warnings
+
+    warnings.warn(
+        f"sheep_spark compiled kernels unavailable ({reason}); using the "
+        "interpreted tree sweep and FFD packer, which run several times slower",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+
+
 def _load() -> None:
-    global _cached_fn, _cached_ffd, _cached_sort_sweep, _cached_seq_tree
-    global _load_attempted
+    global _cached_ffd, _cached_sort_sweep, _cached_seq_tree, _load_attempted
     if _load_attempted:
         return
     _load_attempted = True
     if os.environ.get("SPARK_GRAFT_NO_CSWEEP") == "1":
+        _unavailable("disabled by SPARK_GRAFT_NO_CSWEEP=1")
         return
-    so_path = _compile()
-    if so_path is None:
-        return
-    p64 = ctypes.POINTER(ctypes.c_int64)
+    vp, i64 = ctypes.c_void_p, ctypes.c_int64
     try:
-        lib = ctypes.CDLL(so_path)
-        raw = lib.sheep_sweep
-        raw.restype = ctypes.c_int64
-        raw.argtypes = [p64, p64, ctypes.c_int64, p64, p64, p64]
+        lib = ctypes.CDLL(_compile())
         raw_ffd = lib.sheep_ffd
-        raw_ffd.restype = ctypes.c_int64
-        raw_ffd.argtypes = [
-            p64, ctypes.c_int64, p64, p64, p64, ctypes.c_int64,
-            p64, p64, ctypes.c_int64, ctypes.c_void_p,
-        ]
-        p32 = ctypes.POINTER(ctypes.c_int32)
-        pdb = ctypes.POINTER(ctypes.c_double)
         raw_ss = lib.sheep_sort_sweep
-        raw_ss.restype = ctypes.c_int64
-        raw_ss.argtypes = [
-            p64, p64, ctypes.c_int64, ctypes.c_int64,
-            p32, p32, p32, p64, p64, p64, p64, pdb,
-        ]
         raw_st = lib.sheep_seq_tree
-        raw_st.restype = ctypes.c_int64
-        raw_st.argtypes = [
-            ctypes.c_void_p, ctypes.c_void_p, ctypes.c_int64,
-            ctypes.c_int64, ctypes.c_int64,
-            p64, p32, p32, p32, p32, p32, p32,
-            p64, p64, p64, p64, p64, pdb,
-        ]
-    except Exception:
+    except subprocess.CalledProcessError as e:
+        _unavailable(f"gcc failed: {e.stderr.decode(errors='replace')[-300:]}")
         return
-
-    def fn(lo: np.ndarray, hi: np.ndarray, uf: np.ndarray,
-           kid_out: np.ndarray, par_out: np.ndarray) -> int:
-        return raw(
-            lo.ctypes.data_as(p64),
-            hi.ctypes.data_as(p64),
-            len(lo),
-            uf.ctypes.data_as(p64),
-            kid_out.ctypes.data_as(p64),
-            par_out.ctypes.data_as(p64),
-        )
+    except (OSError, subprocess.TimeoutExpired, AttributeError) as e:
+        _unavailable(f"{type(e).__name__}: {e}")
+        return
+    raw_ffd.restype = i64
+    raw_ffd.argtypes = [vp, i64, vp, vp, vp, i64, vp, vp, i64, vp]
+    raw_ss.restype = i64
+    raw_ss.argtypes = [vp, vp, i64, i64, i64, vp, vp, vp, vp, vp, vp, vp, vp]
+    raw_st.restype = i64
+    raw_st.argtypes = [vp, vp, i64, i64, i64] + [vp] * 13
 
     def fn_ffd(parent: np.ndarray, comp: np.ndarray, kid_order: np.ndarray,
                par_sorted: np.ndarray, max_component: int, parts: np.ndarray,
                part_size: np.ndarray, ks: np.ndarray) -> int:
         return raw_ffd(
-            parent.ctypes.data_as(p64),
-            len(parent),
-            comp.ctypes.data_as(p64),
-            kid_order.ctypes.data_as(p64),
-            par_sorted.ctypes.data_as(p64),
-            max_component,
-            parts.ctypes.data_as(p64),
-            part_size.ctypes.data_as(p64),
-            len(part_size),
+            parent.ctypes.data, len(parent), comp.ctypes.data,
+            kid_order.ctypes.data, par_sorted.ctypes.data, max_component,
+            parts.ctypes.data, part_size.ctypes.data, len(part_size),
             ks.ctypes.data,
         )
 
     def fn_sort_sweep(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
-                      kid_out: np.ndarray, par_out: np.ndarray,
-                      pre_w: np.ndarray, pst_w: np.ndarray):
-        lo_s = np.empty(len(lo), dtype=np.int32)
-        cnt = np.empty(n_vertices + 1, dtype=np.int32)
-        uf = np.empty(n_vertices, dtype=np.int32)
+                      wide: bool, weights: bool):
+        it = np.int64 if wide else np.int32
+        scratch = (np.empty(len(lo), it), np.empty(n_vertices + 1, it),
+                   np.empty(n_vertices, it))
+        kid = np.empty(min(len(lo), n_vertices), dtype=np.int64)
+        par = np.empty_like(kid)
+        pre_w = np.empty(n_vertices, dtype=np.int64) if weights else None
+        pst_w = np.empty(n_vertices, dtype=np.int64) if weights else None
         phases = np.zeros(2, dtype=np.float64)
         n_out = raw_ss(
-            lo.ctypes.data_as(p64),
-            hi.ctypes.data_as(p64),
-            len(lo),
-            n_vertices,
-            lo_s.ctypes.data_as(p32),
-            cnt.ctypes.data_as(p32),
-            uf.ctypes.data_as(p32),
-            kid_out.ctypes.data_as(p64),
-            par_out.ctypes.data_as(p64),
-            pre_w.ctypes.data_as(p64),
-            pst_w.ctypes.data_as(p64),
-            phases.ctypes.data_as(pdb),
+            lo.ctypes.data, hi.ctypes.data, len(lo), n_vertices, int(wide),
+            *(a.ctypes.data for a in scratch), kid.ctypes.data, par.ctypes.data,
+            None if pre_w is None else pre_w.ctypes.data,
+            None if pst_w is None else pst_w.ctypes.data,
+            phases.ctypes.data,
         )
-        if n_out == -2:
-            raise ValueError(
-                "sheep_sort_sweep: an edge endpoint falls outside "
-                f"[0, {n_vertices}) — pos-space input expected"
-            )
-        return n_out, float(phases[0]), float(phases[1])
+        return kid[:n_out], par[:n_out], pre_w, pst_w, (float(phases[0]), float(phases[1]))
 
     def fn_seq_tree(src: np.ndarray, dst: np.ndarray, m: int):
         if src.dtype != dst.dtype or src.dtype not in (np.int32, np.int64):
@@ -573,37 +474,22 @@ def _load() -> None:
         n_edges = len(src)
         deg_full = np.empty(m, dtype=np.int64)
         pos_full = np.empty(m, dtype=np.int32)
-        lo_t = np.empty(n_edges, dtype=np.int32)
-        hi_t = np.empty(n_edges, dtype=np.int32)
-        lo_s = np.empty(n_edges, dtype=np.int32)
-        cnt = np.empty(m + 1, dtype=np.int32)
-        uf = np.empty(m, dtype=np.int32)
-        cap = min(n_edges, m)
-        kid_out = np.empty(cap, dtype=np.int64)
+        scratch = (np.empty(n_edges, np.int32), np.empty(n_edges, np.int32),
+                   np.empty(n_edges, np.int32), np.empty(m + 1, np.int32),
+                   np.empty(m, np.int32))
+        kid_out = np.empty(min(n_edges, m), dtype=np.int64)
         par_out = np.empty_like(kid_out)
         pre_w = np.empty(m, dtype=np.int64)
         pst_w = np.empty(m, dtype=np.int64)
         out_n = np.zeros(1, dtype=np.int64)
         phases = np.zeros(3, dtype=np.float64)
         n_out = raw_st(
-            src.ctypes.data,
-            dst.ctypes.data,
-            src.dtype.itemsize,
-            n_edges,
-            m,
-            deg_full.ctypes.data_as(p64),
-            pos_full.ctypes.data_as(p32),
-            lo_t.ctypes.data_as(p32),
-            hi_t.ctypes.data_as(p32),
-            lo_s.ctypes.data_as(p32),
-            cnt.ctypes.data_as(p32),
-            uf.ctypes.data_as(p32),
-            kid_out.ctypes.data_as(p64),
-            par_out.ctypes.data_as(p64),
-            pre_w.ctypes.data_as(p64),
-            pst_w.ctypes.data_as(p64),
-            out_n.ctypes.data_as(p64),
-            phases.ctypes.data_as(pdb),
+            src.ctypes.data, dst.ctypes.data, src.dtype.itemsize, n_edges, m,
+            deg_full.ctypes.data, pos_full.ctypes.data,
+            *(a.ctypes.data for a in scratch),
+            kid_out.ctypes.data, par_out.ctypes.data,
+            pre_w.ctypes.data, pst_w.ctypes.data,
+            out_n.ctypes.data, phases.ctypes.data,
         )
         if n_out == -2:
             raise ValueError(
@@ -623,7 +509,6 @@ def _load() -> None:
             "phases": (float(phases[0]), float(phases[1]), float(phases[2])),
         }
 
-    _cached_fn = fn
     _cached_ffd = fn_ffd
     _cached_sort_sweep = fn_sort_sweep
     _cached_seq_tree = fn_seq_tree

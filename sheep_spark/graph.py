@@ -156,9 +156,9 @@ def vertices_from_edges(edges_sym: DataFrame,
         import numpy as np
         import pandas as pd
 
-        from .tree import collect_int64_columns
+        from .tree import collect_columns
 
-        vid, degree = collect_int64_columns(deg, ("vid", "degree"))
+        vid, degree = collect_columns(deg, ("vid", "degree"))
         order = np.lexsort((vid, degree))  # primary: degree, tie: vid
         pos = np.empty(n, dtype=np.int64)
         pos[order] = np.arange(n, dtype=np.int64)
@@ -169,48 +169,13 @@ def vertices_from_edges(edges_sym: DataFrame,
         deg.unpersist()
 
 
-def driver_sequence_arrays(canon: DataFrame, timings: dict | None = None,
-                           dense_vid_limit: int = 500_000_000,
-                           ids_fit_int32: bool = False) -> dict:
-    """Fused rank-0 funnel over the canonical half: ONE Arrow collect →
-    degrees, sequence pos, and pos-space edges as numpy arrays.
-
-    Replaces three separate jobs of the staged pipeline — the degree
-    ``groupBy`` shuffle over the doubled view (2E rows), the
-    edges_pos vid→pos join, and the tree builder's (lo, hi) collect —
-    with a single E/2-row collect plus vectorized driver passes
-    (bincount/lexsort/gather). Semantics identical: degree = #distinct
-    neighbors, pos = rank under (degree asc, vid asc) (sequence.h:52-63),
-    (lo, hi) = sorted endpoint positions per undirected edge.
-
-    This is the same centralization sheep's rank 0 performs for its
-    sequence + tree phases, and shares the driver funnel's envelope:
-    callers gate on DRIVER_TREE_MAX_EDGES and use the distributed
-    ``vertices_from_edges``/``edges_pos`` path beyond it.
-
-    Returns dict(vid, degree, pos, lo, hi) of int64 arrays; vid/degree/
-    pos are vertex-indexed (degree-sequence order NOT applied — vid
-    ascending), lo/hi are per-undirected-edge.
-
-    ``ids_fit_int32``: caller guarantees 0 <= id < 2^31 for every
-    endpoint; the collect then casts JVM-side and ships half the bytes
-    (the funnel collect is memory-bandwidth-bound — measured 37-59 s
-    for 35M int64 pairs in degraded host windows). The collector widens
-    back to int64 on arrival, so results are bit-identical (asserted by
-    test_fused_driver_funnel_int32_transfer).
-    """
-    src, dst = _collect_canon_endpoints(canon, timings, ids_fit_int32)
-    return _sequence_from_endpoints(src, dst, dense_vid_limit, timings)
-
-
 def _collect_canon_endpoints(canon: DataFrame, timings: dict | None,
                              ids_fit_int32: bool):
     """Arrow-collect the canonical half's (src, dst) — native width
     (int32 under the narrow transfer, int64 otherwise) — with the
-    wrapped-id rejection (shared by the sequence funnel and the fused
-    sequence+tree funnel). Consumers widen at their own entry when
-    they need int64; the fused C kernel reads either width."""
-    from .tree import collect_native_columns
+    wrapped-id rejection. Consumers widen at their own entry when they
+    need int64; the fused C kernel reads either width."""
+    from .tree import collect_columns
 
     if ids_fit_int32:
         from pyspark.sql import functions as F
@@ -218,7 +183,7 @@ def _collect_canon_endpoints(canon: DataFrame, timings: dict | None,
         canon = canon.select(
             F.col("src").cast("int").alias("src"), F.col("dst").cast("int").alias("dst")
         )
-    src, dst = collect_native_columns(canon, ("src", "dst"), timings)
+    src, dst = collect_columns(canon, ("src", "dst"), timings)
     if ids_fit_int32 and len(src) and (int(src.min()) < 0 or int(dst.min()) < 0):
         # ADVICE r5: under non-ANSI SQL config the JVM-side int cast
         # WRAPS an id >= 2^31 instead of erroring, and every downstream
@@ -227,7 +192,7 @@ def _collect_canon_endpoints(canon: DataFrame, timings: dict | None,
         # negative, so a negative endpoint here proves the caller's
         # promise was false. Two O(E) numpy mins, ~ms at 35M edges.
         raise ValueError(
-            "driver_sequence_arrays: ids_fit_int32 promised 0 <= id < 2^31 "
+            "driver_sequence_tree_arrays: ids_fit_int32 promised 0 <= id < 2^31 "
             "but negative endpoints arrived after the int32 transfer — an "
             "id >= 2^31 wrapped in the JVM-side cast; re-run without "
             "ids_fit_int32 (int64 transfer)"
@@ -237,9 +202,12 @@ def _collect_canon_endpoints(canon: DataFrame, timings: dict | None,
 
 def _sequence_from_endpoints(src, dst, dense_vid_limit: int,
                              timings: dict | None = None) -> dict:
-    """The numpy body of driver_sequence_arrays (post-collect). Widens
-    narrow-transfer int32 endpoints to int64 at entry so every returned
-    array keeps its documented int64 dtype."""
+    """Numpy degree sequence over collected endpoints (the fused
+    funnel's fallback): degree = #distinct neighbors, pos = rank under
+    (degree asc, vid asc) (sequence.h:52-63), (lo, hi) = sorted endpoint
+    positions per undirected edge. Returns dict(vid, degree, pos, lo,
+    hi) of int64 arrays (narrow int32 endpoints are widened at entry);
+    vid/degree/pos are vertex-indexed in vid-ascending order."""
     import time
 
     import numpy as np
@@ -281,21 +249,26 @@ def _sequence_from_endpoints(src, dst, dense_vid_limit: int,
 def driver_sequence_tree_arrays(canon: DataFrame, timings: dict | None = None,
                                 dense_vid_limit: int = 500_000_000,
                                 ids_fit_int32: bool = False) -> dict:
-    """Fused funnel AND tree: one Arrow collect → degrees, sequence
-    pos, and the elimination-tree arrays, with the entire post-collect
-    body in ONE compiled call when ids are dense and fit int32
-    (_csweep.sheep_seq_tree: degree histogram → counting rank →
-    pos-space edges → counting sort by hi → union-find sweep, with the
-    pre/pst weights falling out of its histogram passes). The pos-space
-    (lo, hi) edge list is never materialized driver-side as numpy
-    arrays — the kernel consumes its int32 temporaries internally.
+    """Fused rank-0 funnel AND tree over the canonical half: one Arrow
+    collect → degrees, sequence pos, and the elimination-tree arrays.
 
-    Exactly equal to driver_sequence_arrays + tree.build_tree_arrays
-    (the fallback whenever the compiled kernel is unavailable or
-    declines the input), asserted by
-    tests/test_graph.py::test_fused_seq_tree_matches_staged. Same
-    envelope/caps as those two (DRIVER_TREE_MAX_EDGES gating is the
-    caller's, as before).
+    Replaces three jobs of the staged pipeline — the degree ``groupBy``
+    over the doubled view (2E rows), the edges_pos vid→pos join, and the
+    tree builder's (lo, hi) collect — with a single E/2-row collect.
+    When ids are dense and fit int32 the entire post-collect body is ONE
+    compiled call (_csweep.sheep_seq_tree: degree histogram → counting
+    rank → pos-space edges → the shared counting-sort sweep, with the
+    pre/pst weights as byproducts). Otherwise — kernel unavailable, or
+    declining a multigraph — _sequence_from_endpoints +
+    tree.build_tree_arrays compute the identical result (asserted by
+    tests/test_graph.py::test_fused_seq_tree_matches_staged). This is
+    the same centralization sheep's rank 0 performs; callers gate on
+    DRIVER_TREE_MAX_EDGES and use the distributed path beyond it.
+
+    ``ids_fit_int32``: caller guarantees 0 <= id < 2^31 for every
+    endpoint; the collect then casts JVM-side and ships half the bytes.
+    A false promise raises (CAST_OVERFLOW under ANSI, ValueError after
+    the collect otherwise) instead of wrapping ids.
 
     Returns dict(vid, degree, pos, n_vertices, parent, pst_weight,
     pre_weight); parent is pos-indexed with -1 roots.
@@ -346,27 +319,19 @@ def driver_sequence_tree_arrays(canon: DataFrame, timings: dict | None = None,
 
 def vertices_df_from_arrays(spark: SparkSession, vid, degree, pos) -> DataFrame:
     """``vertices(vid, degree, pos)`` DataFrame from driver arrays (one
-    Arrow upload) — schema-identical to ``vertices_from_edges``. Direct
-    pyarrow upload, pandas fallback (r6; see tree_df_from_arrays)."""
+    direct pyarrow upload) — schema-identical to ``vertices_from_edges``."""
     import numpy as np
     import pyarrow as pa
 
-    try:
-        return spark.createDataFrame(
-            pa.table(
-                {
-                    "vid": pa.array(np.asarray(vid, dtype=np.int64)),
-                    "degree": pa.array(np.asarray(degree, dtype=np.int64)),
-                    "pos": pa.array(np.asarray(pos, dtype=np.int64)),
-                }
-            )
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "vid": pa.array(np.asarray(vid, dtype=np.int64)),
+                "degree": pa.array(np.asarray(degree, dtype=np.int64)),
+                "pos": pa.array(np.asarray(pos, dtype=np.int64)),
+            }
         )
-    except Exception:
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame({"vid": vid, "degree": degree, "pos": pos})
-        )
+    )
 
 
 def edges_pos(edges_sym: DataFrame, vertices: DataFrame,

@@ -224,9 +224,9 @@ def build_jxn_tree(
     deferral (width_limit); ``parent`` is NULL for roots. ``memory_limit``
     bounds live jxn storage (see jxn_kernel).
     """
-    from .tree import collect_int64_columns
+    from .tree import collect_columns
 
-    lo, hi = collect_int64_columns(edges_pos_df, ("lo", "hi"))
+    lo, hi = collect_columns(edges_pos_df, ("lo", "hi"))
     pos_of, parent, pst_w, width, facts = jxn_kernel(
         lo, hi, n_vertices, width_limit=width_limit, memory_limit=memory_limit
     )

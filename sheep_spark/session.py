@@ -111,9 +111,7 @@ def _warm_session(spark: SparkSession) -> None:
 
     df = spark.range(1024).select("id", (F.col("id") % 7).alias("k"))
     df.groupBy("k").agg(F.count("*")).collect()  # codegen + shuffle init
-    tiny = df.limit(64)
-    if hasattr(tiny, "toArrow"):
-        tiny.toArrow()  # driver-side Arrow allocator
+    df.limit(64).toArrow()  # driver-side Arrow allocator
 
     def _w(batches):
         import numpy  # noqa: F401  (the Arrow kernels' imports)
@@ -153,12 +151,3 @@ def _ship_package(spark: SparkSession) -> None:
                         zf.write(full, rel)
     spark.sparkContext.addPyFile(zip_path)
 
-
-def tune_for_sf(spark: SparkSession, n_rows_hint: int) -> None:
-    """Adjust shuffle width to input size (tiny inputs → fewer partitions).
-
-    On a real cluster this is AQE's job; locally it keeps small tests from
-    paying 200-task overheads.
-    """
-    if n_rows_hint < 100_000:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")

@@ -46,11 +46,15 @@ from pyspark.sql import functions as F
 
 TREE_EDGE_SCHEMA = "lo long, hi long"
 
-# _eliminate runs the numpy Boruvka pre-selection only above this input
-# size; below it the plain Python sweep is cheaper (selection costs a few
-# O(E) numpy/hash passes per round, each ~20-40x cheaper per edge than
-# the interpreted sweep).
+# The interpreted sweep runs the numpy Boruvka pre-selection only above
+# this input size; below it the plain Python sweep is cheaper (selection
+# costs a few O(E) numpy/hash passes per round, each ~20-40x cheaper per
+# edge than the interpreted sweep).
 MSF_SELECT_MIN_EDGES = 1_500_000
+
+# Local ids or edge counts at/above this overflow the compiled sweep's
+# int32 internals; _eliminate then selects its int64 instantiation.
+_INT32_LIMIT = 2**31
 
 # Stop selecting when a Boruvka round shrinks the remaining edge set by
 # less than this fraction. A selection round costs ~1/20 of the sweep per
@@ -59,16 +63,6 @@ MSF_SELECT_MIN_EDGES = 1_500_000
 # (the source of round 2's impossible "99.3% union-effective" claim —
 # retention was the SELECTOR quitting, not the input being effective).
 _MSF_EXIT_FRACTION = 0.95
-
-
-def _find(uf: np.ndarray, x: int) -> int:
-    """Union-find find with path halving; root's value is the set's
-    representative = the latest-inserted jnid (unionfind.h semantics:
-    the representative stored at the root is the greatest element)."""
-    while uf[x] != x:
-        uf[x] = uf[uf[x]]
-        x = uf[x]
-    return x
 
 
 # Weight-ordered chunk size for the selection (r6, filter-Kruskal): the
@@ -231,120 +225,70 @@ def _msf_select(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
 
 
 def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
-               select: bool = True,
                timings: dict | None = None,
                weights_out: dict | None = None) -> tuple[np.ndarray, np.ndarray]:
-    """Union-find elimination sweep over (lo, hi) pairs sorted by hi.
+    """Union-find elimination sweep over pos-space (lo, hi) pairs.
 
     Returns (kid, parent) tree-edge arrays. Exact semantics of
     jtree.cpp:34-55 restricted to this edge subset: processing hi
     ascending == inserting vertices in sequence order; adopting
-    find(lo) == adopting the neighbor's component root.
+    find(lo) == adopting the neighbor's component root. Edges with equal
+    hi commute (each emits (component root, hi) whatever their order),
+    so any hi-grouping of the input yields the same tree.
 
-    Fastest path (r6 late): when ids fit int32, ONE compiled call
-    (_csweep.sheep_sort_sweep) counting-sorts the edges by hi (O(E+V),
-    replacing the packed np.sort) and sweeps every edge at C speed —
-    measured 2.2-2.4 s vs 4.4 s for select + packed sort + C sweep at
-    35M edges / V=4M, identical (kid, parent) sets (equal-hi order is
-    free to differ: same-hi edges commute, the law the packed value
-    sort already relied on). Boruvka selection is SKIPPED there: its
-    numpy rounds cost more than the C sweep's extra traffic once the
-    sort is O(E). ``weights_out`` (dict) receives the fused
-    ``pre_weight``/``pst_weight`` bincounts that fall out of that
-    kernel's histogram/scatter passes for free.
+    Two paths, identical output:
 
-    ``select=True`` runs the vectorized Boruvka pass (_msf_select)
-    first on the FALLBACK paths, dropping union-ineffective edges at
-    numpy speed so the interpreted sweep touches only the surviving
-    ≤V-1 forest edges (plus an exactly-handled early-exit remainder).
-    On any graph with E ≫ V the sweep input shrinks ~E/V×: at most V-1
-    edges can ever cause a union. (Round 2 disabled it on the driver
-    path off a mis-measured "99.3% union-effective" figure; that was
-    _msf_select's old 0.75 early-exit quitting after one round, i.e.
-    selection RETENTION, not input effectiveness — on a 4.0M-vertex
-    35M-edge graph ≤11.4% of edges can union.)
+    - compiled (_csweep.sheep_sort_sweep): one call counting-sorts the
+      edges by hi in O(E + V) and sweeps every edge. Its internals are
+      int32, or int64 once n_vertices or len(lo) reaches 2^31 — derived
+      here from the input sizes.
+    - interpreted (no toolchain): a stable argsort by hi and a sweep
+      over Python lists. Above MSF_SELECT_MIN_EDGES, _msf_select first
+      drops union-ineffective edges at numpy speed, so the sweep touches
+      at most V-1 forest edges plus an exactly-handled remainder.
+
+    Ids outside [0, n_vertices) raise ValueError before either path
+    runs. ``weights_out`` (dict) receives ``pre_weight`` = bincount(hi)
+    and ``pst_weight`` = bincount(lo), byproducts of the compiled sort.
     """
-    import time as _time
-
     from . import _csweep
 
+    lo = np.ascontiguousarray(lo, dtype=np.int64)
+    hi = np.ascontiguousarray(hi, dtype=np.int64)
+    if len(lo) and (min(lo.min(), hi.min()) < 0
+                    or max(lo.max(), hi.max()) >= n_vertices):
+        raise ValueError(
+            f"_eliminate: an edge endpoint falls outside [0, {n_vertices}) "
+            "— pos-space input expected"
+        )
+    want_weights = weights_out is not None
     ss_fn = _csweep.loaded_sort_sweep()
-    if ss_fn is not None and n_vertices < 2**31 and len(lo) < 2**31:
-        lo_c = np.ascontiguousarray(lo, dtype=np.int64)
-        hi_c = np.ascontiguousarray(hi, dtype=np.int64)
-        cap = min(len(lo_c), n_vertices)
-        kid_out = np.empty(cap, dtype=np.int64)
-        par_out = np.empty_like(kid_out)
-        pre_w = np.empty(n_vertices, dtype=np.int64)
-        pst_w = np.empty(n_vertices, dtype=np.int64)
-        n_out, sort_s, sweep_s = ss_fn(lo_c, hi_c, n_vertices,
-                                       kid_out, par_out, pre_w, pst_w)
+    if ss_fn is not None:
+        wide = n_vertices >= _INT32_LIMIT or len(lo) >= _INT32_LIMIT
+        kid, par, pre_w, pst_w, (sort_s, sweep_s) = ss_fn(
+            lo, hi, n_vertices, wide, want_weights
+        )
         if timings is not None:
             timings["sort_s"] = round(sort_s, 2)
             timings["sweep_s"] = round(sweep_s, 2)
-        if weights_out is not None:
-            weights_out["pre_weight"] = pre_w
-            weights_out["pst_weight"] = pst_w
-        return kid_out[:n_out], par_out[:n_out]
+    else:
+        if want_weights:
+            pre_w = np.bincount(hi, minlength=n_vertices)
+            pst_w = np.bincount(lo, minlength=n_vertices)
+        if len(lo) >= MSF_SELECT_MIN_EDGES:
+            import time
 
-    if select and len(lo) >= MSF_SELECT_MIN_EDGES:
-        t0 = _time.monotonic()
-        lo, hi = _msf_select(lo, hi, n_vertices)
-        if timings is not None:
-            timings["select_s"] = round(_time.monotonic() - t0, 2)
-
-    c_fn = _csweep.loaded()
-    if c_fn is not None:
-        # Compiled sweep (r6): the same union-find loop at C speed
-        # replaces the interpreted tail — the one serial pass numpy
-        # cannot vectorize (measured 0.4 s vs ~4.6 s over the 4.0M
-        # selected edges at the 35M-edge scale point). Selection above
-        # stays worthwhile: it feeds the sweep ~9x fewer edges and its
-        # rounds cost less than the extra memory-bound sweep traffic
-        # (A/B at 35M: select+sweep 6.2 s vs sweep-all 7.6 s).
-        # Identical output pairs; falls through to the interpreted
-        # paths whenever the compiled kernel is unavailable.
-        t0 = _time.monotonic()
-        if n_vertices < 2**31:
-            # pos-space ids are < n_vertices, so a packed VALUE sort
-            # stands in for the stable argsort (~4x faster); equal-hi
-            # order is free to differ — same-hi edges commute
-            # (test_msf_select_preserves_sweep_output), the same law
-            # _msf_select's own value sort already relies on.
-            packed = np.sort((hi.astype(np.int64) << 31) | lo.astype(np.int64))
-            hi_s = packed >> 31
-            lo_s = packed & ((1 << 31) - 1)
-            del packed
-        else:
-            order = np.argsort(hi, kind="stable")
-            lo_s = np.ascontiguousarray(lo[order], dtype=np.int64)
-            hi_s = np.ascontiguousarray(hi[order], dtype=np.int64)
-        if timings is not None:
-            timings["sort_s"] = round(_time.monotonic() - t0, 2)
-        t0 = _time.monotonic()
-        uf = np.arange(n_vertices, dtype=np.int64)
-        cap = min(len(lo_s), n_vertices)
-        kid_out = np.empty(cap, dtype=np.int64)
-        par_out = np.empty_like(kid_out)
-        n_out = c_fn(lo_s, hi_s, uf, kid_out, par_out)
-        if timings is not None:
-            timings["sweep_s"] = round(_time.monotonic() - t0, 2)
-        return kid_out[:n_out], par_out[:n_out]
-
-    order = np.argsort(hi, kind="stable")
-    # python lists: ~2x faster element access than numpy scalars in the
-    # interpreted sweep; fall back to numpy when the pointer-per-int list
-    # overhead would dominate task/driver memory (ADVICE r2: gate on the
-    # EDGE count too — two 100M-element int lists cost ~7-10 GB)
-    use_lists = n_vertices <= 50_000_000 and len(lo) <= 30_000_000
-    if use_lists:
-        lo_l = lo[order].tolist()
-        hi_l = hi[order].tolist()
+            t0 = time.monotonic()
+            lo, hi = _msf_select(lo, hi, n_vertices)
+            if timings is not None:
+                timings["select_s"] = round(time.monotonic() - t0, 2)
+        # python lists: ~2x faster element access than numpy scalars
+        order = np.argsort(hi, kind="stable")
         uf = list(range(n_vertices))
         kids: list[int] = []
         pars: list[int] = []
-        ka, pa = kids.append, pars.append
-        for x, r in zip(hi_l, lo_l):
+        ka, pa_ = kids.append, pars.append
+        for x, r in zip(hi[order].tolist(), lo[order].tolist()):
             p = uf[r]
             while p != r:  # path halving
                 pp = uf[p]
@@ -353,36 +297,24 @@ def _eliminate(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
                 p = uf[r]
             if r != x:
                 ka(r)
-                pa(x)
+                pa_(x)
                 uf[r] = x
-        return np.asarray(kids, dtype=np.int64), np.asarray(pars, dtype=np.int64)
-    lo = lo[order]
-    hi = hi[order]
-    uf = np.arange(n_vertices, dtype=np.int64)
-    kid_out = np.empty(min(len(lo), n_vertices), dtype=np.int64)
-    par_out = np.empty_like(kid_out)
-    n_out = 0
-    find = _find
-    for i in range(len(lo)):
-        x = int(hi[i])
-        r = find(uf, int(lo[i]))
-        if r != x:
-            kid_out[n_out] = r
-            par_out[n_out] = x
-            n_out += 1
-            uf[r] = x
-    return kid_out[:n_out], par_out[:n_out]
+        kid = np.asarray(kids, dtype=np.int64)
+        par = np.asarray(pars, dtype=np.int64)
+    if want_weights:
+        weights_out["pre_weight"] = pre_w
+        weights_out["pst_weight"] = pst_w
+    return kid, par
 
 
-def _eliminate_arrow(batches: Iterator[pa.RecordBatch], n_vertices: int,
-                     select: bool = True) -> Iterator[pa.RecordBatch]:
+def _eliminate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Per-task kernel wrapper: remap the slice's vertices to dense local
     ids before the sweep, map tree edges back after. The sweep depends
     only on the ORDER of jnids (sort + comparisons), and np.unique's
     sorted relabel is order-preserving, so results are exact — while
     per-task state shrinks from O(global V) to O(vertices present in the
     slice). At 10^9 global vertices a 2M-edge slice costs ~32 MB, not
-    16 GB (``n_vertices`` is kept only for API stability)."""
+    16 GB."""
     los, his = [], []
     for b in batches:
         los.append(b.column(0).to_numpy(zero_copy_only=False))
@@ -393,7 +325,7 @@ def _eliminate_arrow(batches: Iterator[pa.RecordBatch], n_vertices: int,
     hi = np.concatenate(his).astype(np.int64, copy=False)
     verts = np.unique(np.concatenate([lo, hi]))
     kid_l, par_l = _eliminate(
-        np.searchsorted(verts, lo), np.searchsorted(verts, hi), len(verts), select
+        np.searchsorted(verts, lo), np.searchsorted(verts, hi), len(verts)
     )
     yield pa.RecordBatch.from_arrays(
         [pa.array(verts[kid_l]), pa.array(verts[par_l])], names=["lo", "hi"]
@@ -415,9 +347,9 @@ def build_parent_edges(
     fan_in and re-run the same kernel on their union until one remains.
 
     ``n_edges`` (a hint, no job run) scales n_partials so a stage-1
-    slice stays ~2M edges — the sweet spot where the per-task Python
-    sweep stays low-latency; at 1.5B edges that means ~750 partials,
-    not defaultParallelism.
+    slice stays ~2M edges, which keeps per-task state and latency small
+    (and the interpreted sweep tolerable on nodes without a compiler);
+    at 1.5B edges that means ~750 partials, not defaultParallelism.
     """
     spark = edges_pos_df.sparkSession
     if n_partials is None:
@@ -425,19 +357,13 @@ def build_parent_edges(
         if n_edges is not None:
             n_partials = max(n_partials, int(n_edges // 2_000_000) + 1)
 
-    # Boruvka pre-selection runs in EVERY kernel (above the size gate):
-    # stage-1 slices shrink toward their local vertex count, merge rounds
-    # compress their union of fan_in forests ~fan_in×.
-    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _eliminate_arrow(it, n_vertices, select=True)
-
     t = edges_pos_df.select("lo", "hi").repartition(n_partials).mapInArrow(
-        kernel, TREE_EDGE_SCHEMA
+        _eliminate_arrow, TREE_EDGE_SCHEMA
     )
     p = n_partials
     while p > 1:
         p = max(1, p // fan_in)
-        t = t.repartition(p).mapInArrow(kernel, TREE_EDGE_SCHEMA)
+        t = t.repartition(p).mapInArrow(_eliminate_arrow, TREE_EDGE_SCHEMA)
     return t
 
 
@@ -448,92 +374,37 @@ def build_parent_edges(
 DRIVER_TREE_MAX_EDGES = 100_000_000
 
 
-def build_parent_edges_driver(edges_pos_df: DataFrame, n_vertices: int,
-                              timings: dict | None = None) -> DataFrame:
-    """Single-sweep tree build on the driver: Arrow-collect the (lo, hi)
-    pairs, one _eliminate, ship the ≤V-1 tree edges back via Arrow.
-
-    This is the deliberate analogue of sheep's rank-0 funnel (the
-    partition step already centralizes O(V); this centralizes O(E) for
-    graphs under DRIVER_TREE_MAX_EDGES). Beyond the cap,
-    build_parent_edges distributes; results are identical (same kernel,
-    same order laws). Boruvka pre-selection (select=True, the default)
-    cuts the interpreted sweep's input from E to ≤V-1 — on a 35M-edge /
-    4.0M-vertex graph that is a ~9× smaller sweep; see BASELINE.md for
-    the measured retention and stage walls.
-    """
-    import time
-
-    import pandas as pd
-
-    spark = edges_pos_df.sparkSession
-    lo, hi = _collect_pos_pairs(edges_pos_df, timings)
-    t0 = time.monotonic()
-    kid, par = _eliminate(lo, hi, n_vertices)
-    if timings is not None:
-        timings["kernel_s"] = round(time.monotonic() - t0, 2)
-    return spark.createDataFrame(pd.DataFrame({"lo": kid, "hi": par}))
-
-
-def collect_int64_columns(df: DataFrame, cols: tuple[str, ...],
-                          timings: dict | None = None) -> tuple[np.ndarray, ...]:
-    """Collect the named columns as int64 numpy arrays via toArrow
-    (Spark 4; no pandas copy), toPandas fallback. Shared by the driver
-    funnels (tree build, degree-sequence rank)."""
+def collect_columns(df: DataFrame, cols: tuple[str, ...],
+                    timings: dict | None = None) -> tuple[np.ndarray, ...]:
+    """Collect the named columns as numpy arrays via one toArrow (no
+    pandas copy), each at its NATIVE width: an int32 transfer (the
+    narrow funnel cast) arrives as int32 — no widening pass; consumers
+    that need int64 widen at their own entry. A column holding nulls
+    raises ValueError naming it (numpy would silently turn it into
+    float64). Shared by the driver funnels (tree build, degree-sequence
+    rank, jxn)."""
     import time
 
     t0 = time.monotonic()
-    sel = df.select(*cols)
-    if hasattr(sel, "toArrow"):
-        tbl = sel.toArrow()
-        out = tuple(
-            tbl.column(c).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            for c in cols
-        )
-    else:
-        pdf = sel.toPandas()
-        out = tuple(pdf[c].to_numpy(np.int64) for c in cols)
+    tbl = df.select(*cols).toArrow()
+    out = []
+    for c in cols:
+        col = tbl.column(c)
+        if col.null_count:
+            raise ValueError(f"collect_columns: column {c!r} has {col.null_count} nulls")
+        out.append(np.ascontiguousarray(col.to_numpy(zero_copy_only=False)))
     if timings is not None:
         timings["collect_s"] = round(time.monotonic() - t0, 2)
-    return out
-
-
-def _collect_pos_pairs(edges_pos_df: DataFrame, timings: dict | None = None):
-    """(lo, hi) int64 arrays for the driver-strategy kernels."""
-    return collect_int64_columns(edges_pos_df, ("lo", "hi"), timings)
-
-
-def collect_native_columns(df: DataFrame, cols: tuple[str, ...],
-                           timings: dict | None = None) -> tuple[np.ndarray, ...]:
-    """Like collect_int64_columns but keeps each column's NATIVE width:
-    an int32 transfer (the narrow funnel cast) arrives as int32 numpy —
-    no widening pass, half the driver-side footprint. Consumers that
-    need int64 widen at their own entry (the fused C kernel reads
-    either width directly)."""
-    import time
-
-    t0 = time.monotonic()
-    sel = df.select(*cols)
-    if hasattr(sel, "toArrow"):
-        tbl = sel.toArrow()
-        out = tuple(
-            np.ascontiguousarray(tbl.column(c).to_numpy(zero_copy_only=False))
-            for c in cols
-        )
-    else:
-        pdf = sel.toPandas()
-        out = tuple(np.ascontiguousarray(pdf[c].to_numpy()) for c in cols)
-    if timings is not None:
-        timings["collect_s"] = round(time.monotonic() - t0, 2)
-    return out
+    return tuple(out)
 
 
 def build_tree_arrays(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
                       timings: dict | None = None) -> dict:
     """Driver kernel from pre-collected pos-space arrays → jnid-indexed
     {parent (-1 roots), pst_weight, pre_weight} numpy arrays. The fused
-    pipeline (graph.driver_sequence_arrays) feeds this directly, then
-    FFD-packs the returned arrays without any DataFrame round-trip."""
+    funnel's fallback (graph.driver_sequence_tree_arrays) feeds this
+    directly, then FFD-packs the returned arrays without any DataFrame
+    round-trip."""
     import time
 
     t0 = time.monotonic()
@@ -545,14 +416,8 @@ def build_tree_arrays(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
     parent_full[kid] = par
     return {
         "parent": parent_full,
-        # the compiled sort-sweep emits both bincounts as byproducts of
-        # its histogram/scatter passes; recompute only on fallback paths
-        "pst_weight": weights.get(
-            "pst_weight", np.bincount(lo, minlength=n_vertices).astype(np.int64)
-        ),
-        "pre_weight": weights.get(
-            "pre_weight", np.bincount(hi, minlength=n_vertices).astype(np.int64)
-        ),
+        "pst_weight": weights["pst_weight"],
+        "pre_weight": weights["pre_weight"],
     }
 
 
@@ -560,11 +425,10 @@ def tree_df_from_arrays(spark, arrays: dict, with_pre_weight: bool = False) -> D
     """jnid-indexed driver arrays → the canonical tree DataFrame (one
     Arrow upload; schema identical to the join-form build_tree).
 
-    Uploads a pyarrow Table directly (r6): the nullable ``parent``
-    column is a masked int64 arrow array, skipping the pandas
-    nullable-Int64 detour (measured 2.3 → 0.6 s cold at V=4M, same
-    schema, exceptAll-identical rows); pandas remains the fallback for
-    sessions whose createDataFrame lacks arrow-table support."""
+    Uploads a pyarrow Table directly: the nullable ``parent`` column is
+    a masked int64 arrow array, skipping the pandas nullable-Int64
+    detour (measured 2.3 → 0.6 s cold at V=4M, same schema,
+    exceptAll-identical rows)."""
     parent_full = arrays["parent"]
     cols = {
         "jnid": pa.array(np.arange(len(parent_full), dtype=np.int64)),
@@ -573,19 +437,7 @@ def tree_df_from_arrays(spark, arrays: dict, with_pre_weight: bool = False) -> D
     }
     if with_pre_weight:
         cols["pre_weight"] = pa.array(np.asarray(arrays["pre_weight"], dtype=np.int64))
-    try:
-        return spark.createDataFrame(pa.table(cols))
-    except Exception:
-        import pandas as pd
-
-        data = {
-            "jnid": np.arange(len(parent_full), dtype=np.int64),
-            "parent": pd.Series(parent_full).astype("Int64").mask(parent_full < 0),
-            "pst_weight": arrays["pst_weight"],
-        }
-        if with_pre_weight:
-            data["pre_weight"] = arrays["pre_weight"]
-        return spark.createDataFrame(pd.DataFrame(data))
+    return spark.createDataFrame(pa.table(cols))
 
 
 def _build_tree_df_driver(
@@ -595,7 +447,7 @@ def _build_tree_df_driver(
     """Driver-strategy tree: one collect, one kernel, bincount weights,
     one arrow upload. Output schema identical to the join form."""
     spark = edges_pos_df.sparkSession
-    lo, hi = _collect_pos_pairs(edges_pos_df, timings)
+    lo, hi = collect_columns(edges_pos_df, ("lo", "hi"), timings)
     arrays = build_tree_arrays(lo, hi, n_vertices, timings)
     return tree_df_from_arrays(spark, arrays, with_pre_weight)
 

@@ -62,12 +62,11 @@ def test_degree_sequence_driver_and_distributed_agree(spark):
 
 
 def test_fused_driver_funnel_matches_staged_path(spark):
-    """driver_sequence_arrays (one collect + numpy) must reproduce the
-    staged vertices_from_edges + edges_pos + build_tree pipeline exactly
-    — vertices, pos-space edges, tree, and vmeta alike. Exercised on
-    both the dense-vid fast path and the sparse relabel path."""
-    import numpy as np
-
+    """driver_sequence_tree_arrays (one collect + driver kernels) must
+    reproduce the staged vertices_from_edges + edges_pos + build_tree
+    pipeline exactly — vertices, tree with both weights, and vmeta
+    alike. Exercised on both the dense-vid fast path and the sparse
+    relabel path."""
     from sheep_spark import graph, partitioner, tree
     from tests.conftest import random_graph
 
@@ -81,18 +80,15 @@ def test_fused_driver_funnel_matches_staged_path(spark):
         # staged path
         verts = graph.vertices_from_edges(sym).persist()
         n = verts.count()
-        staged_epos = sorted(
-            (r["lo"], r["hi"]) for r in graph.edges_pos(sym, verts).collect()
-        )
         t_staged = tree.build_tree(
-            graph.edges_pos(sym, verts), n, strategy="driver"
+            graph.edges_pos(sym, verts), n, with_pre_weight=True, strategy="driver"
         )
 
         # fused path (force the sparse branch via dense_vid_limit=1)
-        arrs = graph.driver_sequence_arrays(
+        arrs = graph.driver_sequence_tree_arrays(
             canon, dense_vid_limit=1 if label == "sparse" else 500_000_000
         )
-        assert len(arrs["vid"]) == n
+        assert arrs["n_vertices"] == len(arrs["vid"]) == n
         fused_verts = {
             (int(v), int(d), int(p))
             for v, d, p in zip(arrs["vid"], arrs["degree"], arrs["pos"])
@@ -101,13 +97,11 @@ def test_fused_driver_funnel_matches_staged_path(spark):
             (r["vid"], r["degree"], r["pos"]) for r in verts.collect()
         }
         assert fused_verts == staged_verts, label
-        assert sorted(zip(arrs["lo"].tolist(), arrs["hi"].tolist())) == staged_epos, label
 
-        arrays = tree.build_tree_arrays(arrs["lo"], arrs["hi"], n)
-        fused_t = tree.tree_df_from_arrays(spark, arrays)
+        fused_t = tree.tree_df_from_arrays(spark, arrs, with_pre_weight=True)
         assert fused_t.exceptAll(t_staged).unionAll(t_staged.exceptAll(fused_t)).count() == 0, label
 
-        parts, _ = partitioner.forward_partition(arrays["parent"], arrays["pst_weight"], 4)
+        parts, _ = partitioner.forward_partition(arrs["parent"], arrs["pst_weight"], 4)
         vmeta_arr = partitioner.vertex_meta_from_arrays(
             spark, arrs["vid"], arrs["pos"], parts
         )
@@ -118,6 +112,9 @@ def test_fused_driver_funnel_matches_staged_path(spark):
         assert a == b, label
         canon.unpersist()
         verts.unpersist()
+
+
+_FUNNEL_KEYS = ("vid", "degree", "pos", "parent", "pst_weight", "pre_weight")
 
 
 def test_fused_driver_funnel_int32_transfer(spark):
@@ -132,11 +129,12 @@ def test_fused_driver_funnel_int32_transfer(spark):
     canon = graph.symmetrize_canonical(
         edges_df(spark, random_graph(400, 1500, seed=93))
     ).persist()
-    a = graph.driver_sequence_arrays(canon)
-    b = graph.driver_sequence_arrays(canon, ids_fit_int32=True)
-    for k in ("vid", "degree", "pos", "lo", "hi"):
+    a = graph.driver_sequence_tree_arrays(canon)
+    b = graph.driver_sequence_tree_arrays(canon, ids_fit_int32=True)
+    for k in _FUNNEL_KEYS:
         assert a[k].dtype == b[k].dtype == np.int64, k
         assert np.array_equal(a[k], b[k]), k
+    canon.unpersist()
 
 
 def test_fused_driver_funnel_int32_promise_violation_raises(spark):
@@ -153,29 +151,35 @@ def test_fused_driver_funnel_int32_promise_violation_raises(spark):
         [(0, 1), (1, big), (0, big)], "src long, dst long"
     )
     # sanity: the honest path handles the same ids fine (sparse relabel)
-    a = graph.driver_sequence_arrays(canon)
+    a = graph.driver_sequence_tree_arrays(canon)
     assert len(a["vid"]) == 3
     with pytest.raises((ValueError, ArithmeticException)):
-        graph.driver_sequence_arrays(canon, ids_fit_int32=True)
+        graph.driver_sequence_tree_arrays(canon, ids_fit_int32=True)
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:  # non-ANSI: the wrap is silent JVM-side — OUR guard must fire
         with pytest.raises(ValueError, match="ids_fit_int32"):
-            graph.driver_sequence_arrays(canon, ids_fit_int32=True)
+            graph.driver_sequence_tree_arrays(canon, ids_fit_int32=True)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
-def test_fused_seq_tree_matches_staged(spark):
-    """driver_sequence_tree_arrays (r6 latest: one compiled call for the
-    whole post-collect funnel + tree body) must reproduce
-    driver_sequence_arrays + build_tree_arrays exactly — vid/degree/pos,
-    parent, and both weight vectors — on the compiled path AND the
-    forced-fallback path, dense and sparse ids alike."""
+def test_fused_seq_tree_matches_staged(spark, monkeypatch):
+    """driver_sequence_tree_arrays must return the same arrays on every
+    path: the fused compiled call (int64 and narrow int32 transfer), the
+    numpy sequence + compiled sweep fallback, and the kernel-disabled
+    fallback (numpy sequence + interpreted sweep) used as the reference
+    — dense and sparse ids alike, plus the empty graph."""
     import numpy as np
 
-    from sheep_spark import _csweep, graph, tree
+    from sheep_spark import _csweep, graph
     from tests.conftest import random_graph
+
+    def run(canon, disable=(), **kw):
+        with monkeypatch.context() as mp:
+            for name in disable:
+                mp.setattr(_csweep, name, lambda: None)
+            return graph.driver_sequence_tree_arrays(canon, **kw)
 
     base = random_graph(400, 1600, seed=55)
     for shift, label in ((0, "dense"), (10**12, "sparse")):
@@ -183,34 +187,33 @@ def test_fused_seq_tree_matches_staged(spark):
         raw = spark.createDataFrame(edges, "src long, dst long")
         canon = graph.symmetrize_canonical(raw).persist()
 
-        ref = graph.driver_sequence_arrays(canon)
-        n = len(ref["vid"])
-        ref_arrays = tree.build_tree_arrays(ref["lo"], ref["hi"], n)
-
-        fused = graph.driver_sequence_tree_arrays(canon)
-        # forced fallback (kernel unavailable) must also agree
-        real = _csweep.loaded_seq_tree
-        _csweep.loaded_seq_tree = lambda: None
-        try:
-            fallback = graph.driver_sequence_tree_arrays(canon)
-        finally:
-            _csweep.loaded_seq_tree = real
-        variants = [fused, fallback]
+        ref = run(canon, disable=("loaded_seq_tree", "loaded_sort_sweep"))
+        variants = [run(canon), run(canon, disable=("loaded_seq_tree",))]
         if label == "dense":  # narrow int32 transfer end-to-end
-            variants.append(graph.driver_sequence_tree_arrays(canon, ids_fit_int32=True))
+            variants.append(run(canon, ids_fit_int32=True))
 
         for out in variants:
-            assert out["n_vertices"] == n, label
-            assert out["vid"].dtype == out["pos"].dtype == np.int64, label
-            assert np.array_equal(out["vid"], ref["vid"]), label
-            assert np.array_equal(out["degree"], ref["degree"]), label
-            assert np.array_equal(out["pos"], ref["pos"]), label
-            assert np.array_equal(out["parent"], ref_arrays["parent"]), label
-            assert np.array_equal(out["pst_weight"], ref_arrays["pst_weight"]), label
-            assert np.array_equal(out["pre_weight"], ref_arrays["pre_weight"]), label
+            assert out["n_vertices"] == ref["n_vertices"] == len(ref["vid"]), label
+            for k in _FUNNEL_KEYS:
+                assert out[k].dtype == np.int64, (label, k)
+                assert np.array_equal(out[k], ref[k]), (label, k)
         canon.unpersist()
 
     # empty graph
     empty = spark.createDataFrame([], "src long, dst long")
     out = graph.driver_sequence_tree_arrays(empty)
     assert out["n_vertices"] == 0 and len(out["parent"]) == 0
+
+
+def test_collect_columns_rejects_nulls(spark):
+    """A null in a collected column raises ValueError naming the column
+    instead of arriving as float64 and breaking the driver kernels."""
+    import pytest
+
+    from sheep_spark import tree
+
+    df = spark.createDataFrame([(0, 1), (1, None)], "src long, dst long")
+    with pytest.raises(ValueError, match="'dst'"):
+        tree.collect_columns(df, ("src", "dst"))
+    with pytest.raises(ValueError, match="'dst'"):
+        graph.driver_sequence_tree_arrays(df)

@@ -55,6 +55,97 @@ def test_hep_th_end_to_end_partition_quality(spark):
     assert m["down_balance"] <= int((m["n_edges"] // 2) * 1.03)
 
 
+def _hep_th_standin(seed=11, vid_space=8361, n_vids=7600, n_comm=330, n_small=80):
+    """Seeded XS1-shaped stand-in for hep-th: a chain of ~23-vertex
+    communities (the giant component) with sparse links to the next
+    three communities and 0.3% long-range edges, plus n_small tiny
+    components, over a sparse vid space. Raw records include duplicate
+    and self-loop pairs, as a raw edge file may."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    vids = rng.permutation(rng.choice(vid_space, size=n_vids, replace=False))
+    sizes = np.concatenate([rng.integers(2, 5, n_small), np.zeros(n_comm, np.int64)])
+    rest = n_vids - sizes[:n_small].sum()
+    sizes[n_small:] = rest // n_comm
+    sizes[-1] += rest - sizes[n_small:].sum()
+    bounds = np.concatenate([[0], np.cumsum(sizes)])
+    src, dst = [], []
+    for c in range(len(sizes)):
+        a, b = bounds[c], bounds[c + 1]
+        src.append(vids[a:b - 1])  # spanning path: each community connected
+        dst.append(vids[a + 1:b])
+        if c >= n_small:
+            src.append(vids[rng.integers(a, b, 2 * (b - a))])
+            dst.append(vids[rng.integers(a, b, 2 * (b - a))])
+            for step in (1, 2, 3):
+                if c + step < len(sizes) and (step == 1 or rng.random() < 0.3):
+                    src.append(vids[[rng.integers(a, b)]])
+                    dst.append(vids[[rng.integers(bounds[c + step], bounds[c + step + 1])]])
+    giant = vids[bounds[n_small]:]
+    n_long = int(0.003 * sum(len(x) for x in src))
+    src.append(rng.choice(giant, n_long))
+    dst.append(rng.choice(giant, n_long))
+    return np.concatenate(src), np.concatenate(dst)
+
+
+def test_xs1_standin_end_to_end_partition_quality(spark, tmp_path):
+    """The hep-th assertions on a generated XS1 graph (hep-th.dat itself
+    is not shipped): counts from numpy, then tree → FFD k=2 → quality,
+    with the tree built by the driver funnel AND by 8 map/reduce slices
+    plus merge rounds — both must give the same tree, whose roots are
+    the graph's connected components."""
+    import numpy as np
+
+    from sheep_spark import evaluate
+
+    src, dst = _hep_th_standin()
+    rec = np.zeros(len(src), dtype=io.XS1_DTYPE)
+    rec["tail"], rec["head"] = src, dst
+    path = str(tmp_path / "standin.dat")
+    rec.tofile(path)
+
+    lo, hi = np.minimum(src, dst), np.maximum(src, dst)
+    canon = np.unique(np.stack([lo, hi], 1)[lo != hi], axis=0)
+    n_verts = len(np.unique(canon))
+    uf = np.arange(int(canon.max()) + 1)
+
+    def find(x):
+        while uf[x] != x:
+            uf[x] = uf[uf[x]]
+            x = uf[x]
+        return x
+
+    for a, b in canon:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            uf[ra] = rb
+    n_components = len({find(v) for v in np.unique(canon)})
+
+    raw = io.read_xs1(spark, path)
+    assert raw.count() == len(src)
+    sym = graph.symmetrize(raw).persist()
+    assert sym.count() == 2 * len(canon)
+    verts = graph.vertices_from_edges(sym).persist()
+    n = verts.count()
+    assert n == n_verts
+
+    t_driver = tree.build_tree(graph.edges_pos(sym, verts), n, strategy="driver").persist()
+    t_mr = tree.build_tree(graph.edges_pos(sym, verts), n, n_partials=8)
+    assert t_driver.exceptAll(t_mr).unionAll(t_mr.exceptAll(t_driver)).count() == 0
+    facts = tree.tree_facts(t_driver)
+    assert facts["vert_cnt"] == n_verts
+    assert facts["edge_cnt"] == len(canon)
+    assert facts["root_cnt"] == n_components
+
+    assign = partitioner.sheep_partition(t_driver, verts, 2)
+    m = evaluate.evaluate(sym, partitioner.vertex_meta(verts, assign))
+    assert m["ecv_down_per_edge"] < 0.05
+    assert m["down_balance"] <= int((m["n_edges"] // 2) * 1.03)
+    for df in (t_driver, verts, sym):
+        df.unpersist()
+
+
 def test_partitioned_sink(spark, tmp_path):
     edges = spark.createDataFrame(
         [(1, 2, 0), (3, 4, 1), (5, 6, 1)], "src long, dst long, part int"

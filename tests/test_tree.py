@@ -7,9 +7,29 @@ from tests.conftest import degree_pos, edges_df, random_graph
 
 def _sweep_pairs(lo, hi, n):
     kid, par = tree._eliminate(
-        np.asarray(lo, dtype=np.int64), np.asarray(hi, dtype=np.int64), n, select=False
+        np.asarray(lo, dtype=np.int64), np.asarray(hi, dtype=np.int64), n
     )
     return set(zip(kid.tolist(), par.tolist()))
+
+
+def _eliminate_via(path, monkeypatch, lo, hi, n, weights_out=None):
+    """Run tree._eliminate on one of its paths: the compiled kernel with
+    32-bit internals ("c32"), the compiled kernel forced to its 64-bit
+    internals ("c64"), or the interpreted list sweep ("py")."""
+    from sheep_spark import _csweep
+
+    with monkeypatch.context() as mp:
+        if path == "c64":
+            mp.setattr(tree, "_INT32_LIMIT", 0)
+        elif path == "py":
+            mp.setattr(_csweep, "loaded_sort_sweep", lambda: None)
+        return tree._eliminate(lo.copy(), hi.copy(), n, weights_out=weights_out)
+
+
+def _paths():
+    from sheep_spark import _csweep
+
+    return ["c32", "c64", "py"] if _csweep.loaded_sort_sweep() is not None else ["py"]
 
 
 @pytest.mark.parametrize("seed", range(10))
@@ -55,8 +75,8 @@ def test_msf_select_chunked_preserves_sweep_output(seed, chunk):
 
 def test_msf_select_dense_graph_selects_at_most_v_minus_1():
     """On a dense graph run to completion, selection returns exactly the
-    MSF — ≤ V-1 edges — which is the whole point of enabling it on the
-    driver sweep path."""
+    MSF — ≤ V-1 edges — which is the whole point of running it ahead of
+    the interpreted sweep."""
     rng = np.random.default_rng(99)
     n = 100
     a = rng.integers(0, n, 8000)
@@ -128,93 +148,78 @@ def test_disconnected_graph(spark):
     assert sum(1 for p in parent_s if p is None) == 2
 
 
-def test_csweep_matches_interpreted_sweep():
-    """The compiled union-find sweep (r6, _csweep) must emit the exact
-    (kid -> parent) mapping of the interpreted fallback, with and
-    without the Boruvka pre-selection, across random multigraphs."""
-    import numpy as np
-
-    from sheep_spark import _csweep
-
-    if _csweep.loaded() is None:  # no toolchain: the fallback IS the path
-        import pytest
-
-        pytest.skip("C sweep unavailable; interpreted fallback in use")
-
-    def pairs(lo, hi, n, select, force_python):
-        if force_python:
-            real, real_ss = _csweep.loaded, _csweep.loaded_sort_sweep
-            _csweep.loaded = lambda: None
-            _csweep.loaded_sort_sweep = lambda: None
-            try:
-                k, p = tree._eliminate(lo.copy(), hi.copy(), n, select=select)
-            finally:
-                _csweep.loaded = real
-                _csweep.loaded_sort_sweep = real_ss
-        else:
-            k, p = tree._eliminate(lo.copy(), hi.copy(), n, select=select)
-        assert len(set(k.tolist())) == len(k)  # each kid adopted once
-        return dict(zip(k.tolist(), p.tolist()))
-
+def _parity_inputs():
+    """(lo, hi, n, deduped) pos-space inputs: random multigraphs plus the
+    empty, single-edge, duplicate-edge and disconnected cases."""
     rng = np.random.default_rng(29)
-    for trial, (n, m) in enumerate([(6, 3), (40, 200), (500, 3000), (4000, 30000)]):
+    cases = []
+    for n, m in [(6, 3), (40, 200), (500, 3000), (4000, 30000)]:
         a = rng.integers(0, n, size=m)
         b = rng.integers(0, n, size=m)
         keep = a != b
-        lo = np.minimum(a, b)[keep].astype(np.int64)
-        hi = np.maximum(a, b)[keep].astype(np.int64)
-        for select in (True, False):
-            assert pairs(lo, hi, n, select, False) == pairs(lo, hi, n, select, True), (
-                trial,
-                select,
-            )
+        cases.append((np.minimum(a, b)[keep], np.maximum(a, b)[keep], n, False))
+    cases += [
+        ([], [], 7, True),
+        ([2], [5], 6, True),
+        ([0, 1, 0, 1, 0], [1, 2, 1, 2, 2], 3, False),
+        ([0, 1, 3, 4, 6], [1, 2, 4, 5, 7], 9, True),
+    ]
+    return [(np.asarray(lo, np.int64), np.asarray(hi, np.int64), n, d)
+            for lo, hi, n, d in cases]
 
 
-def test_sort_sweep_matches_interpreted_and_emits_bincounts():
-    """The compiled counting-sort + sweep (r6 late, _csweep.sheep_sort_sweep)
-    must emit the exact (kid -> parent) mapping of the interpreted path
-    (equal-hi order differs — counting sort keeps input order, the packed
-    value sort uses lo order — but same-hi edges commute), and its fused
-    pre_weight/pst_weight byproducts must equal the numpy bincounts.
-    Covers multigraphs with duplicate edges, a disconnected graph, the
-    empty input, and out-of-range rejection."""
-    from sheep_spark import _csweep
+def test_csweep_matches_interpreted_sweep(monkeypatch):
+    """Kernel parity: the compiled counting-sort sweep with 32-bit and
+    with 64-bit internals, the interpreted list sweep and the
+    independent serial_tree_oracle all emit the same (kid, parent) set
+    and bincounts."""
+    for lo, hi, n, deduped in _parity_inputs():
+        pairs = sorted(set(zip(lo.tolist(), hi.tolist())))
+        parent_o, pst_o = tree.serial_tree_oracle(pairs, {v: v for v in range(n)})
+        want = {(j, p) for j, p in enumerate(parent_o) if p is not None}
+        if deduped:
+            assert pst_o == np.bincount(lo, minlength=n).tolist()
+        for path in _paths():
+            w: dict = {}
+            k, p = _eliminate_via(path, monkeypatch, lo, hi, n, weights_out=w)
+            assert len(set(k.tolist())) == len(k), path  # each kid adopted once
+            assert set(zip(k.tolist(), p.tolist())) == want, (path, n)
+            assert np.array_equal(w["pre_weight"], np.bincount(hi, minlength=n)), path
+            assert np.array_equal(w["pst_weight"], np.bincount(lo, minlength=n)), path
 
-    if _csweep.loaded_sort_sweep() is None:
-        pytest.skip("C sort-sweep unavailable; fallback paths in use")
 
-    def interp(lo, hi, n):
-        real, real_ss = _csweep.loaded, _csweep.loaded_sort_sweep
-        _csweep.loaded = lambda: None
-        _csweep.loaded_sort_sweep = lambda: None
-        try:
-            k, p = tree._eliminate(lo.copy(), hi.copy(), n, select=False)
-        finally:
-            _csweep.loaded = real
-            _csweep.loaded_sort_sweep = real_ss
-        return dict(zip(k.tolist(), p.tolist()))
+def test_eliminate_rejects_out_of_range_ids_on_every_path(monkeypatch):
+    """Out-of-range ids raise the same ValueError on every _eliminate
+    path (the interpreted sweep used to wrap a negative index into an
+    empty tree, or emit an edge to a vertex past n_vertices)."""
+    for path in _paths():
+        for bad_lo, bad_hi in (([0], [5]), ([-1], [2])):
+            with pytest.raises(ValueError, match="outside"):
+                _eliminate_via(path, monkeypatch, np.array(bad_lo, np.int64),
+                               np.array(bad_hi, np.int64), 3)
 
-    rng = np.random.default_rng(83)
-    for n, m in [(5, 2), (60, 400), (700, 5000), (3000, 40000)]:
-        a = rng.integers(0, n, size=m)
-        b = rng.integers(0, n, size=m)
-        keep = a != b
-        lo = np.minimum(a, b)[keep].astype(np.int64)
-        hi = np.maximum(a, b)[keep].astype(np.int64)
-        w: dict = {}
-        k, p = tree._eliminate(lo, hi, n, weights_out=w)
-        assert dict(zip(k.tolist(), p.tolist())) == interp(lo, hi, n)
-        assert np.array_equal(w["pre_weight"], np.bincount(hi, minlength=n))
-        assert np.array_equal(w["pst_weight"], np.bincount(lo, minlength=n))
 
-    # empty input
-    w = {}
-    k, p = tree._eliminate(np.array([], np.int64), np.array([], np.int64), 7,
-                           weights_out=w)
-    assert len(k) == 0 and np.array_equal(w["pre_weight"], np.zeros(7, np.int64))
+def test_compiled_kernel_unavailable_warns(tmp_path):
+    """A process whose compiled kernels are unavailable says why, once:
+    when disabled by the environment, and when no compiler is found
+    (empty PATH, no cached .so in a fresh temp dir)."""
+    import os
+    import subprocess
+    import sys
 
-    # out-of-range ids must raise, not corrupt
-    with pytest.raises(ValueError):
-        tree._eliminate(np.array([0], np.int64), np.array([5], np.int64), 3)
-    with pytest.raises(ValueError):
-        tree._eliminate(np.array([-1], np.int64), np.array([2], np.int64), 3)
+    code = (
+        "import warnings; warnings.simplefilter('always')\n"
+        "from sheep_spark import _csweep\n"
+        "with warnings.catch_warnings(record=True) as rec:\n"
+        "    assert _csweep.loaded_sort_sweep() is None\n"
+        "    assert _csweep.loaded_ffd() is None\n"
+        "msgs = [str(r.message) for r in rec]\n"
+        "assert len(msgs) == 1 and {why!r} in msgs[0], msgs\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for why, env in (
+        ("SPARK_GRAFT_NO_CSWEEP", {"SPARK_GRAFT_NO_CSWEEP": "1"}),
+        ("FileNotFoundError", {"PATH": str(tmp_path), "TMPDIR": str(tmp_path)}),
+    ):
+        subprocess.run([sys.executable, "-c", code.format(why=why)], check=True,
+                       env={**os.environ, **env}, cwd=root)
