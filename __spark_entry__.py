@@ -250,28 +250,31 @@ def q_sessionize(spark, sf_dir):
 # --- non-SQL-expressible (rows-only checks) --------------------------------
 
 
-def q_elim_tree(spark, sf_dir):
-    from sheep_spark import graph, tree
+def _sheep_parts(spark, sf_dir):
+    """(vertices, tree, vmeta, report) of the k=K sheep partition —
+    the one orchestration path, over the memoized graph's canonical half."""
+    from sheep_spark import pipeline
 
-    edges, verts = _graph(spark, sf_dir)
-    return tree.build_tree(graph.edges_pos(edges, verts), verts.count())
+    edges, _ = _graph(spark, sf_dir)
+    return pipeline.partition_graph(edges.where(F.col("src") < F.col("dst")), K)
+
+
+def q_elim_tree(spark, sf_dir):
+    _, t, _, _ = _sheep_parts(spark, sf_dir)
+    return t
 
 
 def q_sheep_assign(spark, sf_dir):
-    from sheep_spark import graph, partitioner, tree
-
-    edges, verts = _graph(spark, sf_dir)
-    t = tree.build_tree(graph.edges_pos(edges, verts), verts.count())
-    return partitioner.sheep_partition(t, verts, K)
+    _, _, vmeta, _ = _sheep_parts(spark, sf_dir)
+    return vmeta.select("vid", "part")
 
 
 def q_sheep_metrics(spark, sf_dir):
-    from sheep_spark import evaluate, graph, partitioner, tree
+    from sheep_spark import evaluate
 
-    edges, verts = _graph(spark, sf_dir)
-    t = tree.build_tree(graph.edges_pos(edges, verts), verts.count())
-    assign = partitioner.sheep_partition(t, verts, K)
-    m = evaluate.evaluate(edges, partitioner.vertex_meta(verts, assign))
+    edges, _ = _graph(spark, sf_dir)
+    _, _, vmeta, _ = _sheep_parts(spark, sf_dir)
+    m = evaluate.evaluate(edges, vmeta)
     cols = ["n_edges", "edges_cut", "vcom_vol", "ecv_down", "down_balance", "vertex_balance"]
     return spark.createDataFrame([tuple(int(m[c]) for c in cols)], ", ".join(f"{c} long" for c in cols))
 
@@ -328,10 +331,9 @@ def q_fennel_assign(spark, sf_dir):
 
 
 def q_tree_facts(spark, sf_dir):
-    from sheep_spark import graph, tree
+    from sheep_spark import tree
 
-    edges, verts = _graph(spark, sf_dir)
-    t = tree.build_tree(graph.edges_pos(edges, verts), verts.count())
+    _, t, _, _ = _sheep_parts(spark, sf_dir)
     f = tree.tree_facts_full(t)
     cols = ["vert_cnt", "edge_cnt", "width", "vert_height", "edge_height", "root_cnt"]
     return spark.createDataFrame(

@@ -105,7 +105,7 @@ def pagerank_supersteps(spark, edges, iters: int) -> tuple[float, int]:
 def run_sf_suite(spark) -> dict:
     from pyspark.sql import functions as F
 
-    from sheep_spark import analytics, ann, evaluate, graph, partitioner, textops, tree
+    from sheep_spark import analytics, ann, evaluate, graph, partitioner, pipeline, textops
 
     q: dict[str, float] = {}
 
@@ -116,9 +116,8 @@ def run_sf_suite(spark) -> dict:
     q["graph_build"] = time.time() - t0
 
     t0 = time.time()
-    t = tree.build_tree(graph.edges_pos(edges, verts), n_vertices)
-    assign = partitioner.sheep_partition(t, verts, 8)
-    vmeta = partitioner.vertex_meta(verts, assign).persist()
+    _, _, vmeta, _ = pipeline.partition_graph(edges.where(F.col("src") < F.col("dst")), 8)
+    vmeta = vmeta.persist()
     vmeta.count()
     q["tree_and_partition_k8"] = time.time() - t0
 

@@ -6,9 +6,9 @@ Generates a deterministic skewed graph sized like the reference's com-lj
 6.19 s end-to-end on 1 worker, 0.178 µs per undirected edge) and runs
 the full pipeline: load pre-simplified edges from parquet (the
 reference's span likewise starts at the pre-converted com-lj.dat) →
-degree sequence → edges_pos → elimination tree → FFD partition
-k∈{2,8} → evaluator. Synthesis + the dedup exchange run once as prep,
-outside the measured span, cached in /tmp (reported as
+pipeline.partition_graph at k=8 (degree sequence → elimination tree →
+FFD partition → vmeta) → evaluator. Synthesis + the dedup exchange run
+once as prep, outside the measured span, cached in /tmp (reported as
 prep_synth_dedup when paid).
 
 Prints ONE JSON line with per-stage walls + per-edge rates. Stage
@@ -31,30 +31,32 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 EDGES = int(os.environ.get("SPARK_GRAFT_PIPE_EDGES", str(35_000_000)))
 V = int(os.environ.get("SPARK_GRAFT_PIPE_V", str(4_000_000)))
 CPUS = int(os.environ.get("SPARK_GRAFT_PIPE_CPUS", "32"))
-KS = [2, 8]
 
 
-def main() -> None:
-    from bench import synth_edges_raw
-    from sheep_spark import evaluate, graph, partitioner, tree
+def _warm_spark(app: str):
+    """Session plus the pre-clock warmup both legs share → (spark,
+    warmup record). Every step moves a once-per-driver cost a long-lived
+    production driver has already paid out of the timed span."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
     from sheep_spark.session import get_spark
+    from sheep_spark.tree import collect_columns
 
-    # Pre-touch the heap's working set at JVM launch (session.py): this
-    # sandbox backs fresh pages at ~20 MB/s/thread, so cache/shuffle
-    # growth otherwise bleeds page-fault sys-time into the first timed
-    # stages. A long-lived production driver pays this once at startup.
-    # The heap default matches (ADVICE r4: -Xms12g with the 8g driver
-    # default aborted the JVM when launched standalone).
+    # Pre-touch the heap's working set at JVM launch (session.py): on a
+    # VM that backs fresh pages at ~20 MB/s/thread, cache/shuffle growth
+    # otherwise bleeds page-fault sys-time into the first timed stages.
+    # The heap default matches: -Xms12g with the 8g driver default
+    # aborted the JVM when launched standalone.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
     os.environ.setdefault("SPARK_GRAFT_XMS_PRETOUCH", "12g")
-    spark = get_spark("bench-pipeline", cores=CPUS, shuffle_partitions=2 * CPUS)
+    spark = get_spark(app, cores=CPUS, shuffle_partitions=2 * CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm the Python workers before the clock: each of the local[N]
-    # worker processes pays ~2s of spawn + numpy/pandas import on its
-    # first Arrow kernel, which otherwise lands entirely inside
-    # tree_build (measured: 20s cold vs 4s warm at 8M edges). On a real
-    # long-lived cluster workers are already resident.
+    # Python workers: each of the local[N] worker processes pays ~2s of
+    # spawn + numpy/pandas import on its first Arrow kernel (measured:
+    # tree_build 20s cold vs 4s warm at 8M edges).
     def _warm(batches):
         import pandas  # noqa: F401  (the kernels' imports)
 
@@ -62,70 +64,55 @@ def main() -> None:
 
         yield from batches
 
-    spark.range(4 * CPUS).repartition(4 * CPUS).mapInArrow(
-        _warm, "id long"
-    ).count()
+    spark.range(4 * CPUS).repartition(4 * CPUS).mapInArrow(_warm, "id long").count()
 
-    # Warm the DRIVER's memory pool too: this host backs fresh pages at
-    # ~60 MB/s on first touch (see bench.MALLOC_RETAIN_ENV), so the tree
-    # kernel's numpy working set would otherwise pay ~80 s of fake page
-    # faults inside the timed stage. With malloc retention the pool is
-    # reused; a long-lived production driver is always warm.
-    import numpy as np
-
-    _pool = np.ones(600_000_000, dtype=np.int64)  # ~4.8 GB touched once
+    # The driver's memory pool: on a VM that backs fresh pages at ~60 MB/s
+    # on first touch (see bench.MALLOC_RETAIN_ENV), the tree kernel's
+    # numpy working set would otherwise pay ~80 s of fake page faults
+    # inside the timed stage; with malloc retention the pool is reused.
+    # ~4.8 GB at the default 35M edges, scaled with the input.
+    _pool = np.ones(600_000_000 * EDGES // 35_000_000, dtype=np.int64)
     del _pool
 
-    # Warm the Arrow TRANSFER path at full width too (r5): the first
-    # full-size toArrow collect allocates the JVM's direct serialization
-    # buffers and the driver-side Arrow pool, which this sandbox
-    # first-touches at ~60 MB/s — measured 30-60 s for the FIRST 35M-row
-    # collect in degraded windows vs 1-4 s for the second, independent of
-    # dtype. Same synthetic volume and (int,int) shape as the funnel's
-    # real collect; a long-lived production driver pays this once at
-    # startup, not per job. Run it THREE times: warming is gradual in
-    # degraded windows (interleaved A/B on this host: real collect 33 s
-    # after one warmup pass, 25 s after two, 5 s after three — the JVM's
-    # direct arenas and the driver pools grow across collects, each
-    # growth step paying the fault cost).
-    from pyspark.sql import functions as F
-
-    from sheep_spark.tree import collect_columns
-
-    # ADAPTIVE (r6 late): in one full-budget run the real collect still
-    # cost 29.5 s after three fixed warmup passes (post-scaling throttle
-    # state) while every driver-side stage matched the healthy-window
-    # run exactly — the arenas were still growing. Warm until a pass is
-    # actually warm (< 2.5 s) or six passes, and record how many it
-    # took; the warmup is pre-clock prep either way.
-    warm_passes = 0
-    warm_last = 0.0
+    # The Arrow TRANSFER path at full width, in the funnel's own
+    # try_cast(int) shape: the first full-size toArrow collect
+    # allocates the JVM's direct buffers and the driver-side Arrow pool,
+    # measured 30-60 s for the FIRST 35M-row collect in degraded windows
+    # vs 1-4 s after. Warming is gradual (real collect 33 s after one
+    # pass, 25 s after two, 5 s after three) and in one post-scaling run
+    # still 29.5 s after three, so warm ADAPTIVELY: at least three
+    # passes, until one is actually warm (< 2.5 s) or six, recorded.
+    passes, last = 0, 0.0
     for _ in range(6):
         t0 = time.time()
         collect_columns(
             spark.range(EDGES).select(
-                F.col("id").cast("int").alias("src"),
-                F.col("id").cast("int").alias("dst"),
+                F.col("id").try_cast("int").alias("src"),
+                F.col("id").try_cast("int").alias("dst"),
             ),
             ("src", "dst"),
         )
-        warm_last = time.time() - t0
-        warm_passes += 1
-        if warm_passes >= 3 and warm_last < 2.5:
+        last = time.time() - t0
+        passes += 1
+        if passes >= 3 and last < 2.5:
             break
 
-    # Warm the full-width driver UPLOAD shape too (tree_df_from_arrays
-    # ships a V-row arrow table; its first full-size pass measured
-    # 0.9 s vs 3.1 s across windows — same first-touch class as the
-    # collect, same once-per-driver cost in production).
-    import pyarrow as _pa
-
+    # The full-width driver UPLOAD shape (tree_df_from_arrays ships a
+    # V-row arrow table; first full-size pass 0.9 s vs 3.1 s across
+    # windows — the same first-touch class as the collect).
     spark.createDataFrame(
-        _pa.table({"jnid": np.arange(V, dtype=np.int64),
-                   "parent": np.arange(V, dtype=np.int64),
-                   "pst_weight": np.ones(V, dtype=np.int64)})
+        pa.table({"jnid": np.arange(V, dtype=np.int64),
+                  "parent": np.arange(V, dtype=np.int64),
+                  "pst_weight": np.ones(V, dtype=np.int64)})
     ).count()
+    return spark, {"collect_passes": passes, "collect_last_s": round(last, 2)}
 
+
+def main() -> None:
+    from bench import synth_edges_raw
+    from sheep_spark import evaluate, graph, pipeline
+
+    spark, warmup = _warm_spark("bench-pipeline")
     stages: dict[str, float] = {}
 
     # Input prep, OUTSIDE the measured span (r5): the reference's
@@ -158,82 +145,53 @@ def main() -> None:
     # re-scans is a net loss; the parquet scan IS the fast path.
     t0 = time.time()
     canon = spark.read.parquet(path)
-    n_undirected = canon.count()
-    stages["load_edges"] = time.time() - t0
+    read_s = time.time() - t0
     edges = graph.doubled_view(canon)
+
+    # The timed span is pipeline.partition_graph at k=8 (the headline
+    # quality config): its sizing count() ends load_edges; the fused
+    # rank-0 funnel (one Arrow collect, then the rank + sort + sweep body
+    # in one compiled call) is degree_sequence = collect + rank share and
+    # tree_build = kernel share + the tree upload (+ its count below);
+    # pos-space edges fall out of the rank pass (edges_pos = 0) and the
+    # parent/weight arrays never leave the driver (tree_collect = 0).
+    # The vertices and vmeta uploads it adds are reported outside the
+    # core (vertices_upload, assign_join).
+    _verts, t, vmeta, rep = pipeline.partition_graph(canon, 8)
+    if rep["path"] != "driver":
+        raise SystemExit(f"pipeline leg expects the driver funnel, got {rep['path']}")
+    w = rep["walls_s"]
+    n_undirected = rep["n_edges"]
     n_directed = 2 * n_undirected
+    n_vertices = rep["n_vertices"]
+    kernel_s = w.get("kernel_s", 0.0)
+    stages["load_edges"] = read_s + w["count_s"]
+    stages["degree_sequence"] = w["funnel_s"] - kernel_s
+    stages["degree_collect"] = w.get("collect_s", 0.0)
+    stages["degree_rank"] = w.get("rank_s", 0.0)
+    stages["edges_pos"] = 0.0
 
-    # FUSED rank-0 funnel (r5, VERDICT r4 task 3): one Arrow collect of
-    # the cached canonical half replaces the degree groupBy shuffle over
-    # 2E rows, the edges_pos vid→pos join, and the tree builder's
-    # separate (lo, hi) collect.
-    # (the sequence stays as driver arrays — the reference's rank 0
-    # holds it in memory too; vertices_df_from_arrays re-creates the
-    # DataFrame/.seq artifact on demand, outside the measured span)
-    # ADVICE r5: derive the int32-transfer guard from the parquet the
-    # leg actually reads (prepare_canonical_parquet encodes
-    # ..._{edges}_{vertices}.parquet in the path), not from the
-    # subprocess env — a mismatched SPARK_GRAFT_PIPE_EDGES_PATH override
-    # must not smuggle >=2^31 ids through the narrow transfer. An
-    # unparseable custom path falls back to the env V; the funnel itself
-    # now also rejects wrapped ids post-collect.
-    import re
-
-    pv = re.search(r"_(\d+)_(\d+)\.parquet/?$", path)
-    guard_v = int(pv.group(2)) if pv else V
-    t0 = time.time()
-    seq_t: dict = {}
-    # r6 latest: the fused funnel+tree (one collect, then the entire
-    # rank + sort + sweep body in one compiled call; falls back to the
-    # numpy sequence + build_tree_arrays with identical results). Stage attribution: degree_sequence = collect + rank
-    # share of the call, tree_build = kernel share + the DF upload —
-    # the same boundaries as the staged form, and the same core sum.
-    arrs = graph.driver_sequence_tree_arrays(
-        canon, timings=seq_t, ids_fit_int32=guard_v < 2**31
-    )
-    n_vertices = arrs["n_vertices"]
-    funnel_wall = time.time() - t0
-    kernel_s = seq_t.get("kernel_s", 0.0)
-    stages["degree_sequence"] = funnel_wall - kernel_s
-    stages["degree_collect"] = seq_t.get("collect_s", 0.0)
-    stages["degree_rank"] = seq_t.get("rank_s", 0.0)
-    stages["edges_pos"] = 0.0  # fused: pos-space edges fall out of the rank pass
-
-    t0 = time.time()
-    arrays = {
-        "parent": arrs["parent"],
-        "pst_weight": arrs["pst_weight"],
-        "pre_weight": arrs["pre_weight"],
-    }
     # count() materializes the upload inside the timed stage; no persist —
-    # nothing downstream re-reads the DF (the FFD/vmeta steps consume the
+    # nothing downstream re-reads the DF (the FFD/vmeta steps consumed the
     # driver arrays directly) and the 4M-row cache write costs 0.3-0.7 s
     # for zero reuse (round-5 gotcha: never cache a table scanned <= once)
-    t = tree.tree_df_from_arrays(spark, arrays)
+    t0 = time.time()
     t.count()
-    stages["tree_build"] = kernel_s + (time.time() - t0)
+    stages["tree_build"] = kernel_s + w["tree_upload_s"] + (time.time() - t0)
     stages["tree_build_collect"] = 0.0  # fused into degree_collect
     stages["tree_build_kernel"] = kernel_s
-    stages["tree_build_select"] = seq_t.get("select_s", 0.0)  # Boruvka share (fallback paths only)
+    stages["tree_build_select"] = w.get("select_s", 0.0)  # Boruvka share (fallback paths only)
+    stages["tree_collect"] = 0.0
+    stages["ffd_pack_k8"] = w["ffd_s"]
+    stages["vertices_upload"] = w["vertices_upload_s"]
 
-    parts_meta = {}
-    stages["tree_collect"] = 0.0  # parent/weight arrays never left the driver
-    for k in KS:
-        t0 = time.time()
-        parts, _ = partitioner.forward_partition(arrays["parent"], arrays["pst_weight"], k)
-        stages[f"ffd_pack_k{k}"] = time.time() - t0
-        parts_meta[k] = parts
-
-    # evaluate at k=8 (the headline quality config). vmeta comes straight
-    # from the driver arrays (pos→part gather + one Arrow upload) — the
-    # r4 form joined two V-sized tables (4M ⋈ 4M, 18.4 s) to recombine
-    # data the driver already held.
+    # vmeta comes straight from the driver arrays (pos→part gather + one
+    # Arrow upload), not a join of two V-sized tables (4M ⋈ 4M measured
+    # 18.4 s) recombining data the driver already held.
     t0 = time.time()
-    vmeta = partitioner.vertex_meta_from_arrays(
-        spark, arrs["vid"], arrs["pos"], parts_meta[8]
-    ).persist()
+    vmeta = vmeta.persist()
     vmeta.count()
-    stages["assign_join"] = time.time() - t0
+    stages["assign_join"] = w["vmeta_upload_s"] + (time.time() - t0)
 
     # the headline quality gate's subset first (what a production run
     # would compute per round), then the full suite — unless the bench
@@ -263,7 +221,7 @@ def main() -> None:
         + stages["edges_pos"]
         + stages["tree_build"]
         + stages["tree_collect"]
-        + stages["ffd_pack_k2"]
+        + stages["ffd_pack_k8"]
     )  # comparable to sheep's end-to-end load+sort+tree+partition
     print(
         json.dumps(
@@ -277,8 +235,8 @@ def main() -> None:
                 # artifacts (which include synth+dedup in the span)
                 # can't be compared against this one silently
                 "span": "r5-presimplified-input",
-                "warmup": {"collect_passes": warm_passes,
-                           "collect_last_s": round(warm_last, 2)},
+                "partition_graph": {k: rep[k] for k in ("path", "transfer")},
+                "warmup": warmup,
                 "stages_s": {k: round(v, 2) for k, v in stages.items()},
                 "pipeline_core_s": round(core, 2),
                 "us_per_undirected_edge": round(core * 1e6 / n_undirected, 4),
@@ -303,46 +261,13 @@ def parity_main() -> None:
     map/reduce path's fixed costs (worker spawn, merge-round scheduling)
     dominate and the ratio reads 3-10x even though the 35M-edge ratio is
     ~1.1x — so the leg runs full-size, isolated, last."""
-    import time as _time
-
     from bench import synth_edges_raw
-    from sheep_spark import graph, tree
-    from sheep_spark.session import get_spark
+    from sheep_spark import graph, pipeline, tree
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
-    os.environ.setdefault("SPARK_GRAFT_XMS_PRETOUCH", "12g")
-    spark = get_spark("bench-tree-parity", cores=CPUS, shuffle_partitions=2 * CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def _warm(batches):
-        import pandas  # noqa: F401
-
-        import sheep_spark.tree  # noqa: F401
-
-        yield from batches
-
-    spark.range(4 * CPUS).repartition(4 * CPUS).mapInArrow(_warm, "id long").count()
-    import numpy as np
-
-    _pool = np.ones(600_000_000, dtype=np.int64)
-    del _pool
-
-    # warm the full-width Arrow transfer path (see main(): the first
-    # full-size collect pays a 30-60 s buffer first-touch cost that
-    # would otherwise land inside the driver build's measured wall and
-    # flatter the map/reduce ratio; three passes, because warming is gradual —
-    # see main()'s A/B note)
-    from pyspark.sql import functions as F
-
-    from sheep_spark.tree import collect_columns
-
-    for _ in range(3):
-        collect_columns(
-            spark.range(EDGES).select(
-                F.col("id").alias("src"), F.col("id").alias("dst")
-            ),
-            ("src", "dst"),
-        )
+    # the same warmup as main(): without the full-size collect warm the
+    # driver build's measured wall would pay a 30-60 s first-touch cost
+    # and flatter the map/reduce ratio
+    spark, _ = _warm_spark("bench-tree-parity")
 
     path = os.environ.get("SPARK_GRAFT_PIPE_EDGES_PATH")
     if path and os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -350,17 +275,26 @@ def parity_main() -> None:
     else:
         canon = graph.symmetrize_canonical(synth_edges_raw(spark, EDGES, V)).persist()
     pn = canon.count()
+    # Both legs run canon → materialized tree. The driver leg is
+    # partition_graph minus the stages past the tree (FFD and the
+    # vertices/vmeta uploads, from its report); the map/reduce leg is
+    # the staged distributed chain with the partial count
+    # build_parent_edges derives for this edge count.
+    t0 = time.time()
+    _, t_drv, _, rep = pipeline.partition_graph(canon, 8)
+    t_drv = t_drv.persist()
+    t_drv.count()
+    w = rep["walls_s"]
+    drv_wall = time.time() - t0 - w["ffd_s"] - w["vertices_upload_s"] - w["vmeta_upload_s"]
+    t0 = time.time()
     verts = graph.vertices_from_edges(graph.doubled_view(canon)).persist()
     pnv = verts.count()
     epos = graph.edges_pos(None, verts, n_vertices=pnv, once=canon)
-    t0 = _time.time()
-    t_drv = tree.build_tree(epos, pnv, n_edges=pn, strategy="driver").persist()
-    t_drv.count()
-    drv_wall = _time.time() - t0
-    t0 = _time.time()
-    t_mr = tree.build_tree(epos, pnv, n_edges=pn, strategy="mapreduce").persist()
+    t_mr = tree.build_tree(
+        epos, pnv, n_partials=tree.default_n_partials(spark, pn)
+    ).persist()
     t_mr.count()
-    mr_wall = _time.time() - t0
+    mr_wall = time.time() - t0
     mismatch = t_mr.exceptAll(t_drv).unionAll(t_drv.exceptAll(t_mr)).count()
     print(
         json.dumps(

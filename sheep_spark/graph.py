@@ -23,6 +23,8 @@ offsets. This is the distributed equivalent of sheep's parallel sort
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -154,7 +156,6 @@ def vertices_from_edges(edges_sym: DataFrame,
             # the try — the finally unpersist never forces a recompute
             return attach_rank(deg, ["degree", "vid"], out="pos")
         import numpy as np
-        import pandas as pd
 
         from .tree import collect_columns
 
@@ -162,61 +163,54 @@ def vertices_from_edges(edges_sym: DataFrame,
         order = np.lexsort((vid, degree))  # primary: degree, tie: vid
         pos = np.empty(n, dtype=np.int64)
         pos[order] = np.arange(n, dtype=np.int64)
-        return deg.sparkSession.createDataFrame(
-            pd.DataFrame({"vid": vid, "degree": degree, "pos": pos})
-        )
+        return vertices_df_from_arrays(deg.sparkSession, vid, degree, pos)
     finally:
         deg.unpersist()
 
 
-def _collect_canon_endpoints(canon: DataFrame, timings: dict | None,
-                             ids_fit_int32: bool):
-    """Arrow-collect the canonical half's (src, dst) — native width
-    (int32 under the narrow transfer, int64 otherwise) — with the
-    wrapped-id rejection. Consumers widen at their own entry when they
-    need int64; the fused C kernel reads either width."""
-    from .tree import collect_columns
-
-    if ids_fit_int32:
-        from pyspark.sql import functions as F
-
-        canon = canon.select(
-            F.col("src").cast("int").alias("src"), F.col("dst").cast("int").alias("dst")
-        )
-    src, dst = collect_columns(canon, ("src", "dst"), timings)
-    if ids_fit_int32 and len(src) and (int(src.min()) < 0 or int(dst.min()) < 0):
-        # ADVICE r5: under non-ANSI SQL config the JVM-side int cast
-        # WRAPS an id >= 2^31 instead of erroring, and every downstream
-        # degree/tree/quality number silently corrupts. An id in
-        # [2^31, 2^32) — the realistic off-by-one-V case — wraps
-        # negative, so a negative endpoint here proves the caller's
-        # promise was false. Two O(E) numpy mins, ~ms at 35M edges.
-        raise ValueError(
-            "driver_sequence_tree_arrays: ids_fit_int32 promised 0 <= id < 2^31 "
-            "but negative endpoints arrived after the int32 transfer — an "
-            "id >= 2^31 wrapped in the JVM-side cast; re-run without "
-            "ids_fit_int32 (int64 transfer)"
-        )
-    return src, dst
+# Above this max id + 1 the degree sequence stops indexing vertex-sized
+# arrays by raw id (O(max_vid) memory) and relabels through a sorted
+# unique table instead; ids beyond int32 always take that path.
+_DENSE_VID_LIMIT = 500_000_000
 
 
-def _sequence_from_endpoints(src, dst, dense_vid_limit: int,
-                             timings: dict | None = None) -> dict:
+def _collect_canon_endpoints(canon: DataFrame, timings: dict | None):
+    """Arrow-collect the canonical half's (src, dst) → (src, dst,
+    transfer). The first collect ships ``try_cast(int)`` endpoints: half
+    the bytes, and an id outside int32 arrives as NULL instead of
+    wrapping (a plain ``cast`` wraps 2^32+5 to 5 under non-ANSI SQL).
+    Any NULL re-collects at int64, where ``collect_columns`` rejects a
+    genuinely NULL endpoint. Consumers widen at their own entry."""
+    from .tree import arrow_columns, collect_columns
+
+    cols = ("src", "dst")
+    t0 = time.monotonic()
+    tbl = canon.select(*(F.col(c).try_cast("int").alias(c) for c in cols)).toArrow()
+    if not any(tbl.column(c).null_count for c in cols):
+        src, dst = arrow_columns(tbl, cols)
+        transfer = "int32"
+    else:
+        src, dst = collect_columns(canon, cols)
+        transfer = "int64"
+    if timings is not None:
+        timings["collect_s"] = round(time.monotonic() - t0, 2)
+    return src, dst, transfer
+
+
+def _sequence_from_endpoints(src, dst, timings: dict | None = None) -> dict:
     """Numpy degree sequence over collected endpoints (the fused
     funnel's fallback): degree = #distinct neighbors, pos = rank under
     (degree asc, vid asc) (sequence.h:52-63), (lo, hi) = sorted endpoint
     positions per undirected edge. Returns dict(vid, degree, pos, lo,
     hi) of int64 arrays (narrow int32 endpoints are widened at entry);
     vid/degree/pos are vertex-indexed in vid-ascending order."""
-    import time
-
     import numpy as np
 
     src = np.asarray(src).astype(np.int64, copy=False)
     dst = np.asarray(dst).astype(np.int64, copy=False)
     t0 = time.monotonic()
     m = int(max(src.max(), dst.max())) + 1 if len(src) else 0
-    if len(src) and src.min() >= 0 and dst.min() >= 0 and m <= dense_vid_limit:
+    if len(src) and src.min() >= 0 and dst.min() >= 0 and m <= _DENSE_VID_LIMIT:
         # dense-id fast path: O(E + max_vid) bincounts, no sort of the
         # 2E concatenation
         deg_full = np.bincount(src, minlength=m) + np.bincount(dst, minlength=m)
@@ -246,46 +240,39 @@ def _sequence_from_endpoints(src, dst, dense_vid_limit: int,
     return {"vid": vid, "degree": degree, "pos": pos, "lo": lo, "hi": hi}
 
 
-def driver_sequence_tree_arrays(canon: DataFrame, timings: dict | None = None,
-                                dense_vid_limit: int = 500_000_000,
-                                ids_fit_int32: bool = False) -> dict:
+def driver_sequence_tree_arrays(canon: DataFrame, timings: dict | None = None) -> dict:
     """Fused rank-0 funnel AND tree over the canonical half: one Arrow
     collect → degrees, sequence pos, and the elimination-tree arrays.
 
     Replaces three jobs of the staged pipeline — the degree ``groupBy``
     over the doubled view (2E rows), the edges_pos vid→pos join, and the
-    tree builder's (lo, hi) collect — with a single E/2-row collect.
-    When ids are dense and fit int32 the entire post-collect body is ONE
-    compiled call (_csweep.sheep_seq_tree: degree histogram → counting
-    rank → pos-space edges → the shared counting-sort sweep, with the
-    pre/pst weights as byproducts). Otherwise — kernel unavailable, or
-    declining a multigraph — _sequence_from_endpoints +
-    tree.build_tree_arrays compute the identical result (asserted by
+    tree builder's (lo, hi) collect — with a single E/2-row collect
+    (int32 when every id fits, int64 otherwise; see
+    _collect_canon_endpoints). When ids are dense and fit int32 the
+    entire post-collect body is ONE compiled call
+    (_csweep.sheep_seq_tree: degree histogram → counting rank →
+    pos-space edges → the shared counting-sort sweep, with the pre/pst
+    weights as byproducts). Otherwise — kernel unavailable, or declining
+    a multigraph — _sequence_from_endpoints + tree.build_tree_arrays
+    compute the identical result (asserted by
     tests/test_graph.py::test_fused_seq_tree_matches_staged). This is
-    the same centralization sheep's rank 0 performs; callers gate on
-    DRIVER_TREE_MAX_EDGES and use the distributed path beyond it.
-
-    ``ids_fit_int32``: caller guarantees 0 <= id < 2^31 for every
-    endpoint; the collect then casts JVM-side and ships half the bytes.
-    A false promise raises (CAST_OVERFLOW under ANSI, ValueError after
-    the collect otherwise) instead of wrapping ids.
+    the same centralization sheep's rank 0 performs;
+    pipeline.partition_graph gates it on DRIVER_TREE_MAX_EDGES.
 
     Returns dict(vid, degree, pos, n_vertices, parent, pst_weight,
-    pre_weight); parent is pos-indexed with -1 roots.
+    pre_weight, transfer); parent is pos-indexed with -1 roots.
     """
-    import time
-
     import numpy as np
 
     from . import _csweep
     from .tree import build_tree_arrays
 
-    src, dst = _collect_canon_endpoints(canon, timings, ids_fit_int32)
+    src, dst, transfer = _collect_canon_endpoints(canon, timings)
     st_fn = _csweep.loaded_seq_tree()
     if st_fn is not None and len(src) and len(src) < 2**31:
         mn = int(min(src.min(), dst.min()))
         m = int(max(src.max(), dst.max())) + 1
-        if mn >= 0 and m <= dense_vid_limit and m < 2**31:
+        if mn >= 0 and m <= _DENSE_VID_LIMIT:
             t0 = time.monotonic()
             res = st_fn(np.ascontiguousarray(src), np.ascontiguousarray(dst), m)
             if res is not None:
@@ -307,13 +294,14 @@ def driver_sequence_tree_arrays(canon: DataFrame, timings: dict | None = None,
                     "vid": vid, "degree": degree, "pos": pos,
                     "n_vertices": n, "parent": parent_full,
                     "pst_weight": res["pst_w"], "pre_weight": res["pre_w"],
+                    "transfer": transfer,
                 }
-    arrs = _sequence_from_endpoints(src, dst, dense_vid_limit, timings)
+    arrs = _sequence_from_endpoints(src, dst, timings)
     n = len(arrs["vid"])
     arrays = build_tree_arrays(arrs["lo"], arrs["hi"], n, timings=timings)
     return {
         "vid": arrs["vid"], "degree": arrs["degree"], "pos": arrs["pos"],
-        "n_vertices": n, **arrays,
+        "n_vertices": n, **arrays, "transfer": transfer,
     }
 
 

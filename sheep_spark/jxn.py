@@ -16,8 +16,8 @@ Spark-first shape: the elimination game is sequential by definition —
 the reference runs it single-node too, memory-bounded (jtree.h
 ``memory_limit``) — so this is a driver kernel fed by one arrow collect
 of the pos-space edge list, the same rank-0 funnel as
-``tree.build_tree(strategy='driver')``, returning the annotated tree in
-one upload. The partitioner path never builds jxn (reference default
+``tree.build_tree``'s driver sweep, returning the annotated tree in one
+upload. The partitioner path never builds jxn (reference default
 jopts, jtree.h:86-90); this module serves the treewidth / fill
 experiments of the reference's ``-w`` flag, at the same single-node
 scale envelope the reference gives it.

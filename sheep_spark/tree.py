@@ -332,9 +332,17 @@ def _eliminate_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
     )
 
 
+def default_n_partials(spark, n_edges: int | None) -> int:
+    """Stage-1 partial count of the map/reduce build: defaultParallelism,
+    raised so a slice stays ~2M edges when the edge count is known."""
+    n_partials = spark.sparkContext.defaultParallelism
+    if n_edges is not None:
+        n_partials = max(n_partials, int(n_edges // 2_000_000) + 1)
+    return n_partials
+
+
 def build_parent_edges(
     edges_pos_df: DataFrame,
-    n_vertices: int,
     n_partials: int | None = None,
     fan_in: int = 8,
     n_edges: int | None = None,
@@ -347,15 +355,13 @@ def build_parent_edges(
     fan_in and re-run the same kernel on their union until one remains.
 
     ``n_edges`` (a hint, no job run) scales n_partials so a stage-1
-    slice stays ~2M edges, which keeps per-task state and latency small
-    (and the interpreted sweep tolerable on nodes without a compiler);
-    at 1.5B edges that means ~750 partials, not defaultParallelism.
+    slice stays ~2M edges (default_n_partials), which keeps per-task
+    state and latency small (and the interpreted sweep tolerable on
+    nodes without a compiler); at 1.5B edges that means ~750 partials,
+    not defaultParallelism.
     """
-    spark = edges_pos_df.sparkSession
     if n_partials is None:
-        n_partials = spark.sparkContext.defaultParallelism
-        if n_edges is not None:
-            n_partials = max(n_partials, int(n_edges // 2_000_000) + 1)
+        n_partials = default_n_partials(edges_pos_df.sparkSession, n_edges)
 
     t = edges_pos_df.select("lo", "hi").repartition(n_partials).mapInArrow(
         _eliminate_arrow, TREE_EDGE_SCHEMA
@@ -374,28 +380,26 @@ def build_parent_edges(
 DRIVER_TREE_MAX_EDGES = 100_000_000
 
 
-def collect_columns(df: DataFrame, cols: tuple[str, ...],
-                    timings: dict | None = None) -> tuple[np.ndarray, ...]:
-    """Collect the named columns as numpy arrays via one toArrow (no
-    pandas copy), each at its NATIVE width: an int32 transfer (the
-    narrow funnel cast) arrives as int32 — no widening pass; consumers
-    that need int64 widen at their own entry. A column holding nulls
-    raises ValueError naming it (numpy would silently turn it into
-    float64). Shared by the driver funnels (tree build, degree-sequence
-    rank, jxn)."""
-    import time
-
-    t0 = time.monotonic()
-    tbl = df.select(*cols).toArrow()
+def arrow_columns(tbl: pa.Table, cols: tuple[str, ...]) -> tuple[np.ndarray, ...]:
+    """The named columns of a collected Arrow table as numpy arrays, each
+    at its NATIVE width: an int32 transfer (the narrow funnel cast)
+    arrives as int32 — no widening pass; consumers that need int64 widen
+    at their own entry. A column holding nulls raises ValueError naming
+    it (numpy would silently turn it into float64)."""
     out = []
     for c in cols:
         col = tbl.column(c)
         if col.null_count:
             raise ValueError(f"collect_columns: column {c!r} has {col.null_count} nulls")
         out.append(np.ascontiguousarray(col.to_numpy(zero_copy_only=False)))
-    if timings is not None:
-        timings["collect_s"] = round(time.monotonic() - t0, 2)
     return tuple(out)
+
+
+def collect_columns(df: DataFrame, cols: tuple[str, ...]) -> tuple[np.ndarray, ...]:
+    """Collect the named columns as numpy arrays via one toArrow (no
+    pandas copy); see arrow_columns for widths and null handling. Shared
+    by the driver funnels (tree build, degree-sequence rank, jxn)."""
+    return arrow_columns(df.select(*cols).toArrow(), cols)
 
 
 def build_tree_arrays(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
@@ -440,22 +444,9 @@ def tree_df_from_arrays(spark, arrays: dict, with_pre_weight: bool = False) -> D
     return spark.createDataFrame(pa.table(cols))
 
 
-def _build_tree_df_driver(
-    edges_pos_df: DataFrame, n_vertices: int, with_pre_weight: bool,
-    timings: dict | None = None,
-) -> DataFrame:
-    """Driver-strategy tree: one collect, one kernel, bincount weights,
-    one arrow upload. Output schema identical to the join form."""
-    spark = edges_pos_df.sparkSession
-    lo, hi = collect_columns(edges_pos_df, ("lo", "hi"), timings)
-    arrays = build_tree_arrays(lo, hi, n_vertices, timings)
-    return tree_df_from_arrays(spark, arrays, with_pre_weight)
-
-
 def build_tree(
     edges_pos_df: DataFrame, n_vertices: int, n_partials: int | None = None,
     with_pre_weight: bool = False, n_edges: int | None = None,
-    strategy: str = "auto", timings: dict | None = None,
 ) -> DataFrame:
     """``tree(jnid, parent, pst_weight[, pre_weight])`` over jnid = 0..V-1.
 
@@ -469,37 +460,28 @@ def build_tree(
     reads it as Σ over kids(id) — every preorder edge of id lands on
     exactly one kid-root of id, so that sum IS id's pre-degree, which is
     what ``groupBy(hi).count()`` computes directly.
+
+    Two designs, identical trees (pytest-asserted): the driver sweep
+    (rank-0 analogue) when the edge count fits DRIVER_TREE_MAX_EDGES,
+    and the distributed partials+merge (build_parent_edges) above it or
+    whenever ``n_partials`` is passed. Without an ``n_edges`` hint one
+    count() job — cheap next to either build — sizes the input.
     """
     spark = edges_pos_df.sparkSession
-    # strategy: 'driver' = single-sweep rank-0 analogue (fastest under
-    # DRIVER_TREE_MAX_EDGES), 'mapreduce' = distributed partials+merge,
-    # 'auto' = driver iff the edge count fits the cap. Without a hint,
-    # measure instead of guessing (r6, guide §1/§2.4): one count() job —
-    # cheap next to either build — replaces the old silent fall-through
-    # to the multi-stage map/reduce path, which cost ~6× more than the
-    # driver funnel on cap-sized graphs. Trees are identical either way
-    # (strategy parity is pytest-asserted).
-    if strategy == "auto":
-        if n_edges is None and n_partials is None:
+    if n_partials is None:
+        if n_edges is None:
             n_edges = edges_pos_df.count()
-        strategy = (
-            "driver"
-            if n_edges is not None and n_edges <= DRIVER_TREE_MAX_EDGES and n_partials is None
-            else "mapreduce"
-        )
-    if strategy == "driver":
-        # Fully driver-computed: the edges are already collected for the
-        # sweep, so pst/pre weights are np.bincount (milliseconds) and
-        # the whole tree ships back as ONE arrow upload — no 2E-row
-        # groupBy or V-sized joins JVM-side, and no need to persist the
-        # input (it is scanned exactly once).
-        return _build_tree_df_driver(
-            edges_pos_df, n_vertices, with_pre_weight, timings=timings
-        )
+        if n_edges <= DRIVER_TREE_MAX_EDGES:
+            # Fully driver-computed: the edges are already collected for
+            # the sweep, so pst/pre weights are np.bincount (milliseconds)
+            # and the whole tree ships back as ONE arrow upload — no
+            # 2E-row groupBy or V-sized joins JVM-side, and no need to
+            # persist the input (it is scanned exactly once).
+            lo, hi = collect_columns(edges_pos_df, ("lo", "hi"))
+            arrays = build_tree_arrays(lo, hi, n_vertices)
+            return tree_df_from_arrays(spark, arrays, with_pre_weight)
     edges_pos_df = edges_pos_df.persist()
-    parents = build_parent_edges(
-        edges_pos_df, n_vertices, n_partials, n_edges=n_edges
-    )
+    parents = build_parent_edges(edges_pos_df, n_partials, n_edges=n_edges)
     parents = parents.withColumnRenamed("lo", "jnid").withColumnRenamed("hi", "parent")
     pst = edges_pos_df.groupBy(F.col("lo").alias("jnid")).agg(F.count("*").alias("pst_weight"))
     base = spark.range(n_vertices).select(F.col("id").alias("jnid"))
@@ -556,12 +538,12 @@ def serial_tree_oracle(edges: list[tuple[int, int]], pos: dict[int, int]) -> tup
     return parent, pst
 
 
-def merge_parent_edges(tree_a: DataFrame, tree_b: DataFrame, n_vertices: int) -> DataFrame:
+def merge_parent_edges(tree_a: DataFrame, tree_b: DataFrame) -> DataFrame:
     """Public pairwise tree merge (merge_trees.cpp:37-100 / JNodeTable::
     merge, jnode.cpp:174-201): union the two partials' tree edges and
     re-run the elimination kernel. Associative by construction."""
     both = tree_a.select("lo", "hi").unionAll(tree_b.select("lo", "hi"))
-    return build_parent_edges(both, n_vertices, n_partials=1)
+    return build_parent_edges(both, n_partials=1)
 
 
 def save_tree(tree_df: DataFrame, path: str) -> None:

@@ -65,13 +65,13 @@ def test_fused_driver_funnel_matches_staged_path(spark):
     """driver_sequence_tree_arrays (one collect + driver kernels) must
     reproduce the staged vertices_from_edges + edges_pos + build_tree
     pipeline exactly — vertices, tree with both weights, and vmeta
-    alike. Exercised on both the dense-vid fast path and the sparse
-    relabel path."""
+    alike. Exercised on dense ids (int32 transfer, dense-vid rank) and
+    on ids shifted past int32 (int64 transfer, sparse relabel)."""
     from sheep_spark import graph, partitioner, tree
     from tests.conftest import random_graph
 
     base = random_graph(500, 2000, seed=77)
-    for shift, label in ((0, "dense"), (10**12, "sparse")):
+    for shift, label, transfer in ((0, "dense", "int32"), (10**12, "sparse", "int64")):
         edges = [(a + shift, b + shift) for a, b in base]
         raw = spark.createDataFrame(edges, "src long, dst long")
         canon = graph.symmetrize_canonical(raw).persist()
@@ -80,14 +80,11 @@ def test_fused_driver_funnel_matches_staged_path(spark):
         # staged path
         verts = graph.vertices_from_edges(sym).persist()
         n = verts.count()
-        t_staged = tree.build_tree(
-            graph.edges_pos(sym, verts), n, with_pre_weight=True, strategy="driver"
-        )
+        t_staged = tree.build_tree(graph.edges_pos(sym, verts), n, with_pre_weight=True)
 
-        # fused path (force the sparse branch via dense_vid_limit=1)
-        arrs = graph.driver_sequence_tree_arrays(
-            canon, dense_vid_limit=1 if label == "sparse" else 500_000_000
-        )
+        # fused path
+        arrs = graph.driver_sequence_tree_arrays(canon)
+        assert arrs["transfer"] == transfer, label
         assert arrs["n_vertices"] == len(arrs["vid"]) == n
         fused_verts = {
             (int(v), int(d), int(p))
@@ -117,69 +114,23 @@ def test_fused_driver_funnel_matches_staged_path(spark):
 _FUNNEL_KEYS = ("vid", "degree", "pos", "parent", "pst_weight", "pre_weight")
 
 
-def test_fused_driver_funnel_int32_transfer(spark):
-    """ids_fit_int32=True casts the funnel collect to int JVM-side
-    (half the transfer bytes); every returned array must be
-    bit-identical to the default int64 path."""
-    import numpy as np
-
-    from sheep_spark import graph
-    from tests.conftest import edges_df, random_graph
-
-    canon = graph.symmetrize_canonical(
-        edges_df(spark, random_graph(400, 1500, seed=93))
-    ).persist()
-    a = graph.driver_sequence_tree_arrays(canon)
-    b = graph.driver_sequence_tree_arrays(canon, ids_fit_int32=True)
-    for k in _FUNNEL_KEYS:
-        assert a[k].dtype == b[k].dtype == np.int64, k
-        assert np.array_equal(a[k], b[k]), k
-    canon.unpersist()
-
-
-def test_fused_driver_funnel_int32_promise_violation_raises(spark):
-    """A false ids_fit_int32 promise must raise, not corrupt (ADVICE
-    r5): under the ANSI default the JVM cast itself throws
-    CAST_OVERFLOW; under ansi.enabled=false the cast silently WRAPS an
-    id in [2^31, 2^32) to a negative int32 and the funnel's
-    post-collect guard must catch it instead."""
-    import pytest
-    from pyspark.errors.exceptions.captured import ArithmeticException
-
-    big = 2**31 + 7  # wraps to a negative int32 under non-ANSI cast
-    canon = spark.createDataFrame(
-        [(0, 1), (1, big), (0, big)], "src long, dst long"
-    )
-    # sanity: the honest path handles the same ids fine (sparse relabel)
-    a = graph.driver_sequence_tree_arrays(canon)
-    assert len(a["vid"]) == 3
-    with pytest.raises((ValueError, ArithmeticException)):
-        graph.driver_sequence_tree_arrays(canon, ids_fit_int32=True)
-    prev = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:  # non-ANSI: the wrap is silent JVM-side — OUR guard must fire
-        with pytest.raises(ValueError, match="ids_fit_int32"):
-            graph.driver_sequence_tree_arrays(canon, ids_fit_int32=True)
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
-
-
 def test_fused_seq_tree_matches_staged(spark, monkeypatch):
     """driver_sequence_tree_arrays must return the same arrays on every
-    path: the fused compiled call (int64 and narrow int32 transfer), the
-    numpy sequence + compiled sweep fallback, and the kernel-disabled
-    fallback (numpy sequence + interpreted sweep) used as the reference
-    — dense and sparse ids alike, plus the empty graph."""
+    path: the fused compiled call, the numpy sequence + compiled sweep
+    fallback, and the kernel-disabled fallback (numpy sequence +
+    interpreted sweep) used as the reference — dense ids (int32
+    transfer) and sparse ids (int64 transfer) alike, plus the empty
+    graph."""
     import numpy as np
 
     from sheep_spark import _csweep, graph
     from tests.conftest import random_graph
 
-    def run(canon, disable=(), **kw):
+    def run(canon, disable=()):
         with monkeypatch.context() as mp:
             for name in disable:
                 mp.setattr(_csweep, name, lambda: None)
-            return graph.driver_sequence_tree_arrays(canon, **kw)
+            return graph.driver_sequence_tree_arrays(canon)
 
     base = random_graph(400, 1600, seed=55)
     for shift, label in ((0, "dense"), (10**12, "sparse")):
@@ -189,11 +140,10 @@ def test_fused_seq_tree_matches_staged(spark, monkeypatch):
 
         ref = run(canon, disable=("loaded_seq_tree", "loaded_sort_sweep"))
         variants = [run(canon), run(canon, disable=("loaded_seq_tree",))]
-        if label == "dense":  # narrow int32 transfer end-to-end
-            variants.append(run(canon, ids_fit_int32=True))
 
         for out in variants:
             assert out["n_vertices"] == ref["n_vertices"] == len(ref["vid"]), label
+            assert out["transfer"] == ref["transfer"], label
             for k in _FUNNEL_KEYS:
                 assert out[k].dtype == np.int64, (label, k)
                 assert np.array_equal(out[k], ref[k]), (label, k)

@@ -130,7 +130,7 @@ def test_xs1_standin_end_to_end_partition_quality(spark, tmp_path):
     n = verts.count()
     assert n == n_verts
 
-    t_driver = tree.build_tree(graph.edges_pos(sym, verts), n, strategy="driver").persist()
+    t_driver = tree.build_tree(graph.edges_pos(sym, verts), n).persist()
     t_mr = tree.build_tree(graph.edges_pos(sym, verts), n, n_partials=8)
     assert t_driver.exceptAll(t_mr).unionAll(t_mr.exceptAll(t_driver)).count() == 0
     facts = tree.tree_facts(t_driver)

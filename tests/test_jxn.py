@@ -78,7 +78,7 @@ def test_tree_matches_plain_builder(spark):
     epos = spark.createDataFrame(edges, "lo long, hi long")
     t_plain = {
         r["jnid"]: (r["parent"], r["pst_weight"])
-        for r in tree.build_tree(epos, 80, strategy="driver").collect()
+        for r in tree.build_tree(epos, 80).collect()
     }
     df, _ = jxn.build_jxn_tree(epos, 80)
     t_jxn = {

@@ -57,16 +57,15 @@ def test_tree_save_load_and_repartition(spark, tmp_path):
 def test_merge_parent_edges_associative(spark):
     edges = random_graph(90, 180, seed=8)
     pos = degree_pos(edges)
-    n = len(pos)
     half = len(edges) // 2
     sym_a = edges_df(spark, edges[:half])
     sym_b = edges_df(spark, edges[half:])
     verts_all = spark.createDataFrame(list(pos.items()), "vid long, pos long")
     ep_a = graph.edges_pos(sym_a, verts_all.withColumn("degree", verts_all.pos))
     ep_b = graph.edges_pos(sym_b, verts_all.withColumn("degree", verts_all.pos))
-    ta = tree.build_parent_edges(ep_a, n, n_partials=2)
-    tb = tree.build_parent_edges(ep_b, n, n_partials=2)
-    merged = {(r.lo, r.hi) for r in tree.merge_parent_edges(ta, tb, n).collect()}
+    ta = tree.build_parent_edges(ep_a, n_partials=2)
+    tb = tree.build_parent_edges(ep_b, n_partials=2)
+    merged = {(r.lo, r.hi) for r in tree.merge_parent_edges(ta, tb).collect()}
     parent_o, _ = tree.serial_tree_oracle(edges, pos)
     want = {(j, p) for j, p in enumerate(parent_o) if p is not None}
     assert merged == want
@@ -93,8 +92,9 @@ def test_fennel_baseline(spark):
     assert max(loads.values()) <= (n_edges_directed / 4) * 1.03
 
 def test_driver_and_mapreduce_strategies_identical(spark):
-    """build_tree strategy='driver' (rank-0 single sweep) must equal the
-    distributed map/reduce path edge-for-edge."""
+    """build_tree's driver sweep (rank-0 single sweep, the default under
+    DRIVER_TREE_MAX_EDGES) must equal the distributed map/reduce path
+    (selected by n_partials) edge-for-edge."""
     from sheep_spark import graph, tree
     from tests.conftest import edges_df, random_graph
 
@@ -103,8 +103,8 @@ def test_driver_and_mapreduce_strategies_identical(spark):
     verts = graph.vertices_from_edges(sym)
     n = verts.count()
     epos = graph.edges_pos(sym, verts).persist()
-    a = tree.build_tree(epos, n, strategy="driver")
-    b = tree.build_tree(epos, n, n_partials=4, strategy="mapreduce")
+    a = tree.build_tree(epos, n)
+    b = tree.build_tree(epos, n, n_partials=4)
     ra = sorted(tuple(r) for r in a.collect())
     rb = sorted(tuple(r) for r in b.collect())
     assert ra == rb
