@@ -1,12 +1,15 @@
 """Partition-quality evaluators — sheep's exhaustive metric suite
 (lib/partition.cpp:428-521) as DataFrame aggregations.
 
-All metrics share one physical shape: join the symmetrized edge table to
-per-vertex (pos, part) on both endpoints, derive an owner part per edge,
-then a two-stage distinct-count per vertex. The two-stage form
-(distinct pairs → count per vertex) keeps hub vertices skew-safe: the
-heavy groupBy key only ever carries ≤ #parts rows after the first
-partial aggregation.
+Every metric comes from one plan, whatever the part count k: join the
+symmetrized edge table to per-vertex (pos, part) on both endpoints,
+derive an owner part per edge under each rule, then aggregate per
+(vertex, part). Each rule's owner parts are OR-ed into a one-hot part
+mask whose popcount is the vertex's distinct-part count; the mask is
+split into ceil(k / 62) BIGINT words (one word for k <= 62). The scalar
+and per-rule ownership counts ride along as plain sums. Map-side partial
+aggregation keeps hub vertices skew-safe: the group value is a few longs
+regardless of degree.
 
 Metrics (names match the reference's printout):
 - edges_cut  : undirected edges with endpoints in different parts (:452)
@@ -34,8 +37,7 @@ def _mult_hash(col, hash_fn: str):
     return F.pmod(col * F.lit(_HASH_CONSTS[hash_fn]), F.lit(2**32))
 
 
-def joined_edges(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True,
-                 n_vertices: int | None = None,
+def joined_edges(edges_sym: DataFrame, vmeta: DataFrame, n_vertices: int | None = None,
                  once: DataFrame | None = None) -> DataFrame:
     """Symmetrized edges annotated with (pos, part) of both endpoints.
     The broadcast hint is size-guarded (graph.maybe_broadcast); pass
@@ -50,7 +52,7 @@ def joined_edges(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = 
     view's rows, so every downstream aggregation is unchanged."""
     from .graph import maybe_broadcast
 
-    v = maybe_broadcast(vmeta, n_rows=n_vertices) if broadcast_meta else vmeta
+    v = maybe_broadcast(vmeta, n_rows=n_vertices)
     a = v.select(F.col("vid").alias("src"), F.col("pos").alias("pos_a"), F.col("part").alias("part_a"))
     b = v.select(F.col("vid").alias("dst"), F.col("pos").alias("pos_b"), F.col("part").alias("part_b"))
     if once is None:
@@ -72,41 +74,59 @@ def joined_edges(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = 
     )
 
 
-def _sum_distinct_minus_one(pairs: DataFrame, key: str, val: str) -> int:
-    """Σ_key (count distinct val) − 1 — computed as distinct-then-count so
-    partial aggregation absorbs hub skew before the shuffle."""
-    per = pairs.select(key, val).distinct().groupBy(key).agg((F.count("*") - 1).alias("c"))
-    row = per.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("s")).collect()[0]
-    return int(row["s"])
-
-
 #: every metric evaluate() can produce (reference printout order)
 ALL_METRICS = (
     "edges_cut", "vcom_vol", "ecv_down", "ecv_up", "ecv_hash",
     "down_balance", "up_balance", "hash_balance", "vertex_balance",
 )
 
+#: parts per BIGINT mask word
+_WORD_BITS = 62
 
-def evaluate(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True,
-             hash_fn: str = "cormen", num_parts: int | None = None,
+
+def _part_words(part: str, n_words: int) -> list:
+    """One-hot mask of the int column ``part`` as ``n_words`` BIGINT
+    words: word w is ``shiftleft(1, part % 62)`` when ``part DIV 62 = w``,
+    else 0; a single word is the plain shift. SQL shiftleft: the shift
+    amount may be a column (the python F.shiftleft wrapper only takes a
+    literal)."""
+    if n_words == 1:
+        return [F.expr(f"shiftleft(CAST(1 AS BIGINT), {part})")]
+    bit = f"shiftleft(CAST(1 AS BIGINT), {part} % {_WORD_BITS})"
+    return [
+        F.expr(f"IF({part} DIV {_WORD_BITS} = {w}, {bit}, CAST(0 AS BIGINT))")
+        for w in range(n_words)
+    ]
+
+
+def _distinct_minus_one(words: list[list[str]]):
+    """The group's distinct-part count minus one: per mask word, OR the
+    group's bit_or of each listed column and popcount it; sum the words."""
+    total = None
+    for cols in words:
+        m = F.bit_or(cols[0])
+        for c in cols[1:]:
+            m = m.bitwiseOR(F.bit_or(c))
+        total = F.bit_count(m) if total is None else total + F.bit_count(m)
+    return total - 1
+
+
+def evaluate(edges_sym: DataFrame, vmeta: DataFrame, hash_fn: str = "cormen",
              metrics=None, once: DataFrame | None = None) -> dict:
-    """Partition-quality metric dict in TWO jobs over the edge-join:
-    (1) per-vertex bitmask aggregation carrying the scalar counts as
-    extra aggregates, (2) all per-part max loads via ONE explode scan.
-    The ≤62-part bitmask path (every real sheep config) does NOT cache
-    the join: with the vertex side broadcast the join is a pure
-    map-side hash probe, and re-deriving it per job is cheaper at scale
-    than materializing a 9-column E-sized cache (measured at 35M edges:
-    the r2 cached 3-job form cost 222 s cold; see BASELINE.md).
+    """Partition-quality metric dict for any part count in TWO jobs:
+    (1) the O(V) part histogram, (2) ONE pass over the edge-join that
+    aggregates per (vertex, part) and re-groups by part, collecting one
+    row per part. The join is NOT cached: with the vertex side broadcast
+    it is a pure map-side hash probe, and re-deriving it is cheaper at
+    scale than materializing a 9-column E-sized cache (measured at 35M
+    edges: a cached 3-job form cost 222 s cold; see BASELINE.md).
 
-    ``metrics`` selects a subset of ALL_METRICS (default: all). The
-    headline quality gate only needs ``("edges_cut", "ecv_down",
-    "down_balance")`` — that subset runs the minimal jobs (~3× less
-    work than the full suite). ``n_edges`` (and ``ecv_down_per_edge``
-    when ecv_down is requested) are always included.
-
-    >62 parts falls back to the cached metric-tagged union + two-stage
-    distinct — the hub-skew-safe general form.
+    ``metrics`` selects a subset of ALL_METRICS (default: all); a subset
+    drops the other metrics' columns from the same plan. The headline
+    quality gate only needs ``("edges_cut", "ecv_down",
+    "down_balance")``. ``n_edges`` (and ``ecv_down_per_edge`` when
+    ecv_down is requested) are always included. ``once``: see
+    joined_edges.
     """
     requested = tuple(metrics) if metrics is not None else ALL_METRICS
     unknown = set(requested) - set(ALL_METRICS)
@@ -120,195 +140,80 @@ def evaluate(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True
     ).otherwise(F.col("part_b"))
     owners = {"down": down_owner, "up": up_owner, "hash": hash_owner}
     ecv_wanted = [m for m in ("vcom_vol", "ecv_down", "ecv_up", "ecv_hash") if m in requested]
-    bal_wanted = [m for m in ("down_balance", "up_balance", "hash_balance", "vertex_balance")
-                  if m in requested]
-    edge_bal = [m for m in bal_wanted if m != "vertex_balance"]
+    edge_bal = [m for m in ("down_balance", "up_balance", "hash_balance") if m in requested]
 
-    # ONE tiny O(V) job yields the part histogram → num_parts, the
-    # broadcast guard's row count, AND vertex_balance. The r5 form ran
-    # three separate jobs for these (maybe_broadcast count, max(part),
-    # and the vmeta leg of the _balances scan).
+    # ONE tiny O(V) job yields the part histogram → the mask word count,
+    # the broadcast guard's row count, AND vertex_balance.
     part_rows = vmeta.groupBy("part").agg(F.count("*").alias("c")).collect()
     n_vertices = sum(int(r["c"]) for r in part_rows)
-    if num_parts is None:
-        num_parts = max((int(r["part"]) for r in part_rows), default=-1) + 1
+    n_parts = max((int(r["part"]) for r in part_rows), default=0) + 1
+    n_words = -(-n_parts // _WORD_BITS)
 
-    j = joined_edges(edges_sym, vmeta, broadcast_meta, n_vertices=n_vertices, once=once)
+    j = joined_edges(edges_sym, vmeta, n_vertices=n_vertices, once=once)
 
-    out: dict = {}
-    ecv: dict = {}
-    if num_parts <= 62 and not ecv_wanted and not edge_bal:
-        # No per-vertex set metric and no edge balance requested: the
-        # scalar counts need no groupBy at all — one flat agg over the
-        # edge-join, no E-sized shuffle (ADVICE r3).
-        row = j.agg(
-            F.count("*").alias("n_directed"),
-            F.sum(
-                ((F.col("src") < F.col("dst")) & (F.col("part_a") != F.col("part_b"))).cast("long")
-            ).alias("edges_cut"),
-        ).collect()[0]
-        out["n_edges"] = int(row["n_directed"] or 0) // 2
-        if "edges_cut" in requested:
-            out["edges_cut"] = int(row["edges_cut"] or 0)
-    elif num_parts <= 62:
-        # ONE pass over the edge-join (r6 — the r5 form ran a SECOND
-        # E-sized explode scan for the balances; guide §2.4): per
-        # (src, part), bit_or each requested ownership rule's part into
-        # a long mask (integer shiftleft — no floating point), popcount
-        # at the end; the scalar counts AND the per-rule ownership
-        # counts ride along as plain sums. Map-side partials absorb hub
-        # skew (the group value is a few longs regardless of degree).
-        # The per-vertex rows then re-group by part (V→K rows, a tiny
-        # second exchange inside the same job) and K rows are collected.
-        #
-        # Balance identities (exact, not approximations): a down/up-
-        # owned directed row's owner part IS part_a — the group key —
-        # because ownership picks the src endpoint exactly when the
-        # pos comparison favors it; and exactly one directed row of
-        # each undirected edge satisfies the strict hash-winner
-        # predicate below (ties broken toward the larger vid, exactly
-        # the rule the old canonical-row explode applied).
-        mask_cols = {
-            "vcom_a": F.expr("shiftleft(CAST(1 AS BIGINT), part_a)"),
-            "vcom_b": F.expr("shiftleft(CAST(1 AS BIGINT), part_b)"),
-        }
-        sel = [
-            "src",
-            F.col("part_a").alias("part"),
-            ((F.col("src") < F.col("dst")) & (F.col("part_a") != F.col("part_b")))
-            .cast("long").alias("cut"),
-        ]
-        aggs = [F.count("*").alias("n_directed"), F.sum("cut").alias("edges_cut")]
-        if "vcom_vol" in ecv_wanted:
-            sel += [mask_cols["vcom_a"].alias("ma"), mask_cols["vcom_b"].alias("mb")]
-            aggs.append((F.bit_count(F.bit_or("ma").bitwiseOR(F.bit_or("mb"))) - 1).alias("vcom_vol"))
-        jj = j
-        for name, owner in owners.items():
-            key = f"ecv_{name}"
-            if key in ecv_wanted:
-                # SQL shiftleft: the shift amount may be a column (the
-                # python F.shiftleft wrapper only takes a literal)
-                jj = jj.withColumn(f"{name}_p", owner)
-                sel.append(F.expr(f"shiftleft(CAST(1 AS BIGINT), {name}_p)").alias(f"m_{name}"))
-                aggs.append((F.bit_count(F.bit_or(f"m_{name}")) - 1).alias(key))
-        if "down_balance" in edge_bal:
-            sel.append((F.col("pos_a") < F.col("pos_b")).cast("long").alias("own_down"))
-            aggs.append(F.sum("own_down").alias("n_down"))
-        if "up_balance" in edge_bal:
-            sel.append((F.col("pos_a") > F.col("pos_b")).cast("long").alias("own_up"))
-            aggs.append(F.sum("own_up").alias("n_up"))
-        if "hash_balance" in edge_bal:
-            h_src = _mult_hash(F.col("src"), hash_fn)
-            h_dst = _mult_hash(F.col("dst"), hash_fn)
-            sel.append(
-                ((h_src < h_dst) | ((h_src == h_dst) & (F.col("src") > F.col("dst"))))
-                .cast("long").alias("own_hash")
-            )
-            aggs.append(F.sum("own_hash").alias("n_hash"))
-        per_vertex = jj.select(*sel).groupBy("src", "part").agg(*aggs)
-        final = [F.sum("n_directed").alias("n_directed"), F.sum("edges_cut").alias("edges_cut")]
-        final += [F.sum(m).alias(m) for m in ecv_wanted]
-        bal_col = {"down_balance": "n_down", "up_balance": "n_up", "hash_balance": "n_hash"}
-        final += [F.sum(bal_col[m]).alias(bal_col[m]) for m in edge_bal]
-        rows = per_vertex.groupBy("part").agg(*final).collect()
-        out["n_edges"] = sum(int(r["n_directed"] or 0) for r in rows) // 2
-        if "edges_cut" in requested:
-            out["edges_cut"] = sum(int(r["edges_cut"] or 0) for r in rows)
-        for m in ecv_wanted:
-            ecv[m] = sum(int(r[m] or 0) for r in rows)
-        for m in edge_bal:
-            out[m] = max((int(r[bal_col[m]] or 0) for r in rows), default=0)
-        bal_wanted = [m for m in bal_wanted if m == "vertex_balance"]
-    else:
-        # >62 parts: cached join + metric-tagged union + two-stage
-        # distinct (the persist pays when the same join feeds 5 scans)
-        j = j.persist()
-        try:
-            scalars = j.agg(
-                F.count("*").alias("n_directed"),
-                F.sum(
-                    ((F.col("src") < F.col("dst")) & (F.col("part_a") != F.col("part_b"))).cast("long")
-                ).alias("edges_cut"),
-            ).collect()[0]
-            out["n_edges"] = int(scalars["n_directed"]) // 2
-            if "edges_cut" in requested:
-                out["edges_cut"] = int(scalars["edges_cut"] or 0)
+    # ONE pass over the edge-join: per (src, part), bit_or
+    # each requested ownership rule's part into its mask words (integer
+    # shiftleft — no floating point), popcount at the end; the scalar
+    # counts AND the per-rule ownership counts ride along as plain sums.
+    # The per-vertex rows then re-group by part (V→K rows, a tiny second
+    # exchange inside the same job) and K rows are collected.
+    #
+    # Balance identities (exact, not approximations): a down/up-owned
+    # directed row's owner part IS part_a — the group key — because
+    # ownership picks the src endpoint exactly when the pos comparison
+    # favors it; and exactly one directed row of each undirected edge
+    # satisfies the strict hash-winner predicate below (ties broken
+    # toward the larger vid, the reference's rule for x < y).
+    sel = [
+        "src",
+        F.col("part_a").alias("part"),
+        ((F.col("src") < F.col("dst")) & (F.col("part_a") != F.col("part_b")))
+        .cast("long").alias("cut"),
+    ]
+    aggs = [F.count("*").alias("n_directed"), F.sum("cut").alias("edges_cut")]
+    if "vcom_vol" in ecv_wanted:
+        words = zip(_part_words("part_a", n_words), _part_words("part_b", n_words))
+        for w, (ma, mb) in enumerate(words):
+            sel += [ma.alias(f"ma_{w}"), mb.alias(f"mb_{w}")]
+        aggs.append(
+            _distinct_minus_one([[f"ma_{w}", f"mb_{w}"] for w in range(n_words)]).alias("vcom_vol")
+        )
+    for name, owner in owners.items():
+        key = f"ecv_{name}"
+        if key in ecv_wanted:
+            j = j.withColumn(f"{name}_p", owner)
+            sel += [m.alias(f"m_{name}_{w}") for w, m in enumerate(_part_words(f"{name}_p", n_words))]
+            aggs.append(_distinct_minus_one([[f"m_{name}_{w}"] for w in range(n_words)]).alias(key))
+    if "down_balance" in edge_bal:
+        sel.append((F.col("pos_a") < F.col("pos_b")).cast("long").alias("own_down"))
+        aggs.append(F.sum("own_down").alias("n_down"))
+    if "up_balance" in edge_bal:
+        sel.append((F.col("pos_a") > F.col("pos_b")).cast("long").alias("own_up"))
+        aggs.append(F.sum("own_up").alias("n_up"))
+    if "hash_balance" in edge_bal:
+        h_src = _mult_hash(F.col("src"), hash_fn)
+        h_dst = _mult_hash(F.col("dst"), hash_fn)
+        sel.append(
+            ((h_src < h_dst) | ((h_src == h_dst) & (F.col("src") > F.col("dst"))))
+            .cast("long").alias("own_hash")
+        )
+        aggs.append(F.sum("own_hash").alias("n_hash"))
+    per_vertex = j.select(*sel).groupBy("src", "part").agg(*aggs)
+    bal_col = {"down_balance": "n_down", "up_balance": "n_up", "hash_balance": "n_hash"}
+    sums = ["n_directed", "edges_cut", *ecv_wanted, *(bal_col[m] for m in edge_bal)]
+    rows = per_vertex.groupBy("part").agg(*[F.sum(c).alias(c) for c in sums]).collect()
 
-            def tagged(metric, p_col):
-                return j.select(F.lit(metric).alias("metric"), "src", p_col.alias("p"))
-
-            ecv_rows = None
-            if "vcom_vol" in ecv_wanted:
-                ecv_rows = tagged("vcom_vol", F.col("part_b")).unionAll(
-                    tagged("vcom_vol", F.col("part_a"))
-                )
-            for name, owner in owners.items():
-                key = f"ecv_{name}"
-                if key in ecv_wanted:
-                    t = tagged(key, owner)
-                    ecv_rows = t if ecv_rows is None else ecv_rows.unionAll(t)
-            if ecv_rows is not None:
-                per_vertex = (
-                    ecv_rows.distinct()
-                    .groupBy("metric", "src")
-                    .agg((F.count("*") - 1).alias("c"))
-                    .groupBy("metric")
-                    .agg(F.sum("c").alias("s"))
-                )
-                ecv = {r["metric"]: int(r["s"]) for r in per_vertex.collect()}
-
-            if bal_wanted:
-                out.update(_balances(j, vmeta, owners, bal_wanted))
-                bal_wanted = []
-        finally:
-            j.unpersist()
-
-    # vertex_balance falls out of the O(V) part histogram already
-    # collected above; only the >62-part fallback ever reaches
-    # _balances (it clears bal_wanted itself).
-    if "vertex_balance" in bal_wanted:
+    out = {"n_edges": sum(int(r["n_directed"] or 0) for r in rows) // 2}
+    for m in ("edges_cut", *ecv_wanted):
+        if m in requested:
+            out[m] = sum(int(r[m] or 0) for r in rows)
+    for m in edge_bal:
+        out[m] = max((int(r[bal_col[m]] or 0) for r in rows), default=0)
+    if "vertex_balance" in requested:
         out["vertex_balance"] = max((int(r["c"]) for r in part_rows), default=0)
-        bal_wanted = [m for m in bal_wanted if m != "vertex_balance"]
-    if bal_wanted:
-        out.update(_balances(j, vmeta, owners, bal_wanted))
-
-    for m in ecv_wanted:
-        out[m] = ecv.get(m, 0)
     if "ecv_down" in requested:
         out["ecv_down_per_edge"] = out["ecv_down"] / max(out["n_edges"], 1)
     return out
-
-
-def _balances(j: DataFrame, vmeta: DataFrame, owners: dict, wanted: list) -> dict:
-    conds = {
-        "down_balance": (F.col("pos_a") < F.col("pos_b"), owners["down"]),
-        "up_balance": (F.col("pos_a") > F.col("pos_b"), owners["up"]),
-        "hash_balance": (F.col("src") < F.col("dst"), owners["hash"]),
-    }
-    elems = [
-        F.when(cond, F.struct(F.lit(m).alias("metric"), owner.alias("part")))
-        for m, (cond, owner) in conds.items()
-        if m in wanted
-    ]
-    rows = None
-    if elems:
-        rows = (
-            j.select(F.explode(F.array(*elems)).alias("mp"))
-            .where(F.col("mp").isNotNull())
-            .select("mp.metric", "mp.part")
-        )
-    if "vertex_balance" in wanted:
-        v = vmeta.select(F.lit("vertex_balance").alias("metric"), F.col("part"))
-        rows = v if rows is None else rows.unionAll(v)
-    got = {
-        r["metric"]: int(r["m"])
-        for r in rows.groupBy("metric", "part")
-        .count()
-        .groupBy("metric")
-        .agg(F.max("count").alias("m"))
-        .collect()
-    }
-    return {m: got.get(m, 0) for m in wanted}
 
 
 def evaluate_oracle(edges: list[tuple[int, int]], pos: dict[int, int], part: dict[int, int],

@@ -130,8 +130,11 @@ def attach_rank(df: DataFrame, order_cols: list[str], out: str = "pos") -> DataF
     return out_df
 
 
-def vertices_from_edges(edges_sym: DataFrame,
-                        driver_rank_max: int = 30_000_000) -> DataFrame:
+# Up to this many vertices vertices_from_edges ranks on the driver.
+DRIVER_RANK_MAX = 30_000_000
+
+
+def vertices_from_edges(edges_sym: DataFrame) -> DataFrame:
     """``vertices(vid, degree, pos)`` — sheep's degreeSequence (sequence.h:52-63).
 
     degree = #distinct neighbors (the edge table is symmetrized + deduped,
@@ -139,7 +142,7 @@ def vertices_from_edges(edges_sym: DataFrame,
     pos    = rank under (degree asc, vid asc); pos == sheep's jnid.
     Zero-degree vertices never appear (graph_wrapper.h:61-62 skips them).
 
-    Below ``driver_rank_max`` vertices the rank runs on the driver
+    Up to ``DRIVER_RANK_MAX`` vertices the rank runs on the driver
     (toArrow collect + np.lexsort + one arrow upload — the analogue of
     the tree builder's rank-0 funnel, ~5× faster than the distributed
     two-phase rank at sandbox scale); above it, ``attach_rank``
@@ -150,7 +153,7 @@ def vertices_from_edges(edges_sym: DataFrame,
     deg = deg.persist()
     try:
         n = deg.count()
-        if n > driver_rank_max:
+        if n > DRIVER_RANK_MAX:
             # attach_rank materializes its output eagerly (localCheckpoint)
             # before returning, so the deg cache is consumed HERE, inside
             # the try — the finally unpersist never forces a recompute

@@ -90,8 +90,8 @@ def write_xs1(edges: DataFrame, path: str) -> None:
 def write_sequence_text(vertices: DataFrame, path: str) -> None:
     """Text sequence sink (writeTextSequence, sequence.h:153-157): one vid
     per line in pos(jnid) order. Single-file by contract — interop with
-    the reference's readTextSequence, test scale; the scale sink is
-    tree.save_sequence (parquet)."""
+    the reference's readTextSequence, test scale; at scale, write the
+    vertices table as parquet."""
     vertices.select("vid", "pos").repartition(1).sortWithinPartitions("pos").select(
         F.col("vid").cast("string").alias("value")
     ).write.mode("overwrite").text(path)

@@ -224,40 +224,22 @@ def backward_partition(parent: np.ndarray, weight: np.ndarray, num_parts: int,
     return parts
 
 
-def tree_to_arrays(tree_df: DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Collect tree(jnid,parent,pst_weight) into jnid-indexed numpy arrays
-    via Arrow (driver-side, O(V) — same centralization as sheep rank 0)."""
-    pdf = tree_df.select("jnid", "parent", "pst_weight").toPandas()
-    n = len(pdf)
-    parent = np.full(n, -1, dtype=np.int64)
-    weight = np.zeros(n, dtype=np.int64)
-    jn = pdf["jnid"].to_numpy()
-    par = pdf["parent"].to_numpy()
-    mask = ~np.isnan(par.astype("float64"))
-    parent[jn[mask]] = par[mask].astype(np.int64)
-    weight[jn] = pdf["pst_weight"].to_numpy().astype(np.int64)
-    return parent, weight
-
-
-def tree_weight_array(tree_df: DataFrame, vtx_weight: bool = False,
-                      pst_weight: bool = True, pre_weight: bool = False) -> np.ndarray:
-    """Per-node packing weight under the reference's flag set
-    (get_weight, partition.cpp:38-48): vtx adds 1 per node
+def tree_parent_weight(tree_df: DataFrame, vtx_weight: bool = False, pst_weight: bool = True,
+                       pre_weight: bool = False) -> tuple[np.ndarray, np.ndarray]:
+    """jnid-indexed (parent, packing weight) from ONE Arrow collect of the
+    tree (``parent`` -1 at roots). The weight follows the reference's
+    flag set (get_weight, partition.cpp:38-48): vtx adds 1 per node
     (vertex-balanced parts), pst adds the post-degree (edge-balanced,
     the default), pre adds the pre-degree (requires a tree built with
     ``with_pre_weight=True``; see build_tree for the kids-sum identity)."""
-    cols = ["jnid", "pst_weight"] + (["pre_weight"] if pre_weight else [])
-    pdf = tree_df.select(*cols).toPandas()
-    n = len(pdf)
-    weight = np.zeros(n, dtype=np.int64)
-    jn = pdf["jnid"].to_numpy()
-    if vtx_weight:
-        weight += 1
-    if pst_weight:
-        weight[jn] += pdf["pst_weight"].to_numpy().astype(np.int64)
-    if pre_weight:
-        weight[jn] += pdf["pre_weight"].to_numpy().astype(np.int64)
-    return weight
+    from .tree import tree_arrays
+
+    cols = ("pst_weight",) * pst_weight + ("pre_weight",) * pre_weight
+    arrays = tree_arrays(tree_df, cols)
+    weight = np.full(len(arrays["parent"]), int(vtx_weight), dtype=np.int64)
+    for c in cols:
+        weight += arrays[c]
+    return arrays["parent"], weight
 
 
 def sheep_partition(tree_df: DataFrame, vertices: DataFrame, num_parts: int,
@@ -271,9 +253,7 @@ def sheep_partition(tree_df: DataFrame, vertices: DataFrame, num_parts: int,
     from .graph import maybe_broadcast
 
     spark = tree_df.sparkSession
-    parent, weight = tree_to_arrays(tree_df)
-    if (vtx_weight, pst_weight, pre_weight) != (False, True, False):
-        weight = tree_weight_array(tree_df, vtx_weight, pst_weight, pre_weight)
+    parent, weight = tree_parent_weight(tree_df, vtx_weight, pst_weight, pre_weight)
     parts, _ = forward_partition(parent, weight, num_parts, balance_factor)
     assign = assign_df(spark, parts)
     assign = maybe_broadcast(assign, n_rows=len(parts))
@@ -409,15 +389,15 @@ def vertex_meta_from_arrays(spark: SparkSession, vid: np.ndarray, pos: np.ndarra
     )
 
 
-def down_assign(edges_sym: DataFrame, vmeta: DataFrame, broadcast_meta: bool = True) -> DataFrame:
+def down_assign(edges_sym: DataFrame, vmeta: DataFrame) -> DataFrame:
     """``edge_parts(src, dst, part)`` — each undirected edge exactly once
     (src < dst by vid, partition.cpp:615-617), owned by the part of its
-    lower-pos endpoint (partition.cpp:623). ``broadcast_meta=True`` still
-    routes through maybe_broadcast, so an over-limit vmeta falls back to
-    a shuffle join rather than a driver-sized broadcast."""
+    lower-pos endpoint (partition.cpp:623). The vmeta broadcast goes
+    through maybe_broadcast, so an over-limit vmeta falls back to a
+    shuffle join rather than a driver-sized broadcast."""
     from .graph import maybe_broadcast
 
-    v = maybe_broadcast(vmeta) if broadcast_meta else vmeta
+    v = maybe_broadcast(vmeta)
     a = v.select(F.col("vid").alias("src"), F.col("pos").alias("pos_a"), F.col("part").alias("part_a"))
     b = v.select(F.col("vid").alias("dst"), F.col("pos").alias("pos_b"), F.col("part").alias("part_b"))
     once = edges_sym.where(F.col("src") < F.col("dst"))

@@ -41,6 +41,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -402,6 +403,22 @@ def collect_columns(df: DataFrame, cols: tuple[str, ...]) -> tuple[np.ndarray, .
     return arrow_columns(df.select(*cols).toArrow(), cols)
 
 
+def tree_arrays(tree_df: DataFrame, weights: tuple[str, ...]) -> dict:
+    """One Arrow collect of tree(jnid, parent, *weights) → jnid-indexed
+    int64 numpy arrays: ``parent`` (a NULL parent, i.e. a root, reads as
+    -1) and each named weight column. Driver-side, O(V) — the same
+    centralization as sheep's rank 0."""
+    cols = ("jnid", "parent", *weights)
+    tbl = tree_df.select(*cols).toArrow()
+    tbl = tbl.set_column(1, "parent", pc.fill_null(tbl.column("parent"), -1))
+    jn, *vals = arrow_columns(tbl, cols)
+    out = {}
+    for c, v in zip(cols[1:], vals):
+        out[c] = np.zeros(len(jn), dtype=np.int64)
+        out[c][jn] = v
+    return out
+
+
 def build_tree_arrays(lo: np.ndarray, hi: np.ndarray, n_vertices: int,
                       timings: dict | None = None) -> dict:
     """Driver kernel from pre-collected pos-space arrays → jnid-indexed
@@ -558,15 +575,6 @@ def load_tree(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def save_sequence(vertices: DataFrame, path: str) -> None:
-    """Sequence sink (.seq, sequence.h:133-184 → parquet of vertices)."""
-    vertices.select("vid", "degree", "pos").write.mode("overwrite").parquet(path)
-
-
-def load_sequence(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def tree_path_sums(parent: np.ndarray, node_w: np.ndarray) -> np.ndarray:
     """Per-node sum of ``node_w`` over the node's STRICT ancestors, by
     pointer doubling: O(V log height) fully-vectorized rounds instead of
@@ -613,14 +621,10 @@ def tree_facts_full(tree_df: DataFrame) -> dict:
     pass over the O(V) collected arrays, like the reference's rank 0;
     heights via pointer-doubling (tree_heights) — no interpreted O(V)
     loop remains."""
-    import numpy as np
-
-    pdf = tree_df.select("jnid", "parent", "pst_weight").toPandas().sort_values("jnid")
-    n = len(pdf)
-    pst = pdf["pst_weight"].to_numpy(np.int64)
-    par_f = pdf["parent"].to_numpy("float64", na_value=np.nan)
-    is_root = np.isnan(par_f)
-    par = np.where(is_root, -1, np.nan_to_num(par_f, nan=-1)).astype(np.int64)
+    arrays = tree_arrays(tree_df, ("pst_weight",))
+    par, pst = arrays["parent"], arrays["pst_weight"]
+    n = len(par)
+    is_root = par < 0
 
     w = pst + 1
     running = np.maximum.accumulate(w) if n else w

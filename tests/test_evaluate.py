@@ -1,25 +1,35 @@
 import random
 
+import pytest
+
 from sheep_spark import evaluate, graph, partitioner
 from tests.conftest import degree_pos, edges_df, random_graph
 
 
-def test_spark_evaluator_matches_python_port(spark):
+@pytest.mark.parametrize("k", [4, 62, 63, 130])
+def test_spark_evaluator_matches_python_port(spark, k):
     """DataFrame metric suite == direct python port of the reference's
-    nested-loop evaluator (partition.cpp:428-521)."""
+    nested-loop evaluator (partition.cpp:428-521), on both sides of each
+    62-part mask word boundary: the full suite and every single-metric
+    request."""
     edges = random_graph(90, 200, seed=21)
     pos = degree_pos(edges)
     rng = random.Random(4)
-    part = {v: rng.randrange(4) for v in pos}
+    part = {v: rng.randrange(k) for v in pos}
+    part[min(pos)] = k - 1  # the top part (and hence the last word) is in use
 
     sym = edges_df(spark, edges)
     verts = graph.vertices_from_edges(sym)
     assign = spark.createDataFrame(list(part.items()), "vid long, part int")
-    vmeta = partitioner.vertex_meta(verts, assign)
+    vmeta = partitioner.vertex_meta(verts, assign).persist()
 
     got = evaluate.evaluate(sym, vmeta)
     want = evaluate.evaluate_oracle(edges, pos, part)
     assert got == want
+    for m in evaluate.ALL_METRICS:
+        one = evaluate.evaluate(sym, vmeta, metrics=(m,))
+        assert m in one
+        assert one == {key: want[key] for key in one}, m
 
 
 def test_canonical_once_path_matches_doubled(spark):
@@ -97,21 +107,12 @@ def test_metrics_subset_fast_mode(spark):
     assert bal_only["up_balance"] == full["up_balance"]
     ecv_only = evaluate.evaluate(sym, vmeta, metrics=("vcom_vol",))
     assert ecv_only["vcom_vol"] == full["vcom_vol"]
-    import pytest
+    # the scalar-only request shapes
+    cut_only = evaluate.evaluate(sym, vmeta, metrics=("edges_cut",))
+    assert cut_only == {"n_edges": full["n_edges"], "edges_cut": full["edges_cut"]}
+    vbal_only = evaluate.evaluate(sym, vmeta, metrics=("vertex_balance",))
+    assert vbal_only == {"n_edges": full["n_edges"], "vertex_balance": full["vertex_balance"]}
 
     with pytest.raises(ValueError):
         evaluate.evaluate(sym, vmeta, metrics=("nope",))
 
-
-def test_bitmask_and_distinct_paths_agree(spark):
-    """The k<=62 bitmask single-pass and the general tagged-distinct path
-    must produce identical metrics (num_parts=100 forces the fallback)."""
-    from tests.conftest import edges_df, random_graph
-
-    edges = random_graph(40, 90, seed=3)
-    sym = edges_df(spark, edges)
-    verts = graph.vertices_from_edges(sym)
-    vmeta = partitioner.vertex_meta(verts, partitioner.naive_partition(verts, 5)).persist()
-    fast = evaluate.evaluate(sym, vmeta)
-    slow = evaluate.evaluate(sym, vmeta, num_parts=100)
-    assert fast == slow

@@ -79,3 +79,15 @@ def test_sheep_beats_naive_on_zipf_pages_graph(spark):
     )
     assert m_sheep["ecv_down"] < m_naive["ecv_down"]
     assert m_sheep["down_balance"] <= int((m_sheep["n_edges"] // 4) * 1.03)
+
+
+def test_mint_vertex_ids_driver_and_distributed_agree(spark, monkeypatch):
+    """The driver url sort and the distributed attach_rank mint identical
+    dense vids (code-point order == Spark's UTF-8 byte order)."""
+    pairs = [("b", "a"), ("é", "z"), ("a", "Z"), ("ß", "b"), ("z", "é")]
+    raw = spark.createDataFrame(pairs, extract.EDGES_RAW_SCHEMA)
+    driver = sorted(map(tuple, extract.mint_vertex_ids(raw).collect()))
+    monkeypatch.setattr(graph, "DRIVER_RANK_MAX", 0)
+    distributed = sorted(map(tuple, extract.mint_vertex_ids(raw).collect()))
+    assert driver == distributed
+    assert [u for u, _ in sorted(driver, key=lambda r: r[1])] == sorted({u for p in pairs for u in p})

@@ -47,7 +47,7 @@ def test_tpch_graph_deterministic(spark):
     )
 
 
-def test_degree_sequence_driver_and_distributed_agree(spark):
+def test_degree_sequence_driver_and_distributed_agree(spark, monkeypatch):
     """The driver lexsort rank (small-V funnel) and the distributed
     two-phase rank must produce identical (vid, degree, pos) rows."""
     from tests.conftest import edges_df, random_graph
@@ -57,7 +57,8 @@ def test_degree_sequence_driver_and_distributed_agree(spark):
     edges = random_graph(150, 400, seed=31)
     sym = edges_df(spark, edges)
     a = graph.vertices_from_edges(sym)  # n << cap → driver path
-    b = graph.vertices_from_edges(sym, driver_rank_max=0)  # force distributed
+    monkeypatch.setattr(graph, "DRIVER_RANK_MAX", 0)  # force distributed
+    b = graph.vertices_from_edges(sym)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 

@@ -124,9 +124,14 @@ def test_weight_flag_variants_against_port(spark):
         pst[lo] += 1
         pre[hi] += 1
 
-    w_pst = partitioner.tree_weight_array(t)
-    w_vtx = partitioner.tree_weight_array(t, vtx_weight=True, pst_weight=False)
-    w_all = partitioner.tree_weight_array(t, vtx_weight=True, pst_weight=True, pre_weight=True)
+    parent, w_pst = partitioner.tree_parent_weight(t)
+    _, w_vtx = partitioner.tree_parent_weight(t, vtx_weight=True, pst_weight=False)
+    _, w_all = partitioner.tree_parent_weight(t, vtx_weight=True, pst_weight=True, pre_weight=True)
+    want_parent = [-1] * n
+    for r in t.collect():
+        if r["parent"] is not None:
+            want_parent[r["jnid"]] = r["parent"]
+    assert parent.tolist() == want_parent
     assert w_pst.tolist() == pst
     assert w_vtx.tolist() == [1] * n
     assert w_all.tolist() == [1 + pst[j] + pre[j] for j in range(n)]
